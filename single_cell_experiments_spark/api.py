@@ -222,24 +222,33 @@ class AnnFrame:
     @classmethod
     def from_zarr(cls, spark: SparkSession, group_path: str) -> "AnnFrame":
         """Load a Zarr v2 group written by ``to_zarr`` /
-        ``sources.zarrv2.write_zarr_group`` (``X`` matrix + ``vec_id``
-        index; ref ``AnnDataRdd.from_zarr`` [M]).  Chunk objects are
-        listed and decoded executor-side; column-chunked grids reassemble
-        on ``row``.
+        ``sources.zarrv2.write_zarr_group`` (ref ``AnnDataRdd.from_zarr``
+        [M]).
 
-        Consolidated-aware: when the group carries ``.zmetadata``
-        (``sources.zarrv2.consolidate_metadata``), BOTH the member
-        discovery (which obs_/var_ arrays exist) and every array's
-        metadata come from that ONE document — no per-array ``.zarray``
-        reads, no directory listing for metadata; unconsolidated groups
-        fall back to the per-array path unchanged."""
+        Each dense member loads in one chunk-grid pass
+        (``sources.zarrv2.read_zarr_rows``): planned from metadata alone,
+        each task decodes its row chunk of the matrix together with the
+        overlapping index and annotation chunks and yields finished rows —
+        no chunk listing, shuffle or join.  ``X``, ``obs_*``, ``obsm_*``,
+        ``layers_*`` and ``raw_X`` are keyed by ``vec_id``; ``var_*``,
+        ``raw_var_*`` and ``varm_*`` by gene position.  An absent chunk
+        object reads as the array's ``fill_value`` (the Zarr v2 rule); a
+        member whose length disagrees with its axis raises ``ValueError``.
+        CSR-encoded ``X`` and ``obsp_*`` go through
+        ``sources.sparse.read_zarr_csr``.
+
+        Consolidated-aware: with a ``.zmetadata``
+        (``sources.zarrv2.consolidate_metadata``), member discovery and
+        every array's metadata come from that ONE document; unconsolidated
+        groups read each member's ``.zarray``."""
+        import functools
+
+        from .sources.sparse import read_zarr_csr
         from .sources.zarrv2 import (
-            _plan_matrix_read,
-            _plan_vector_read,
-            _validate_v2_meta,
+            member_meta,
             read_consolidated_meta,
-            read_zarr_matrix,
-            read_zarr_vector,
+            read_group_attrs,
+            read_zarr_rows,
         )
 
         try:
@@ -247,109 +256,36 @@ class AnnFrame:
         except FileNotFoundError:
             md = None
 
-        def _consolidated_meta(arr: str) -> dict:
-            key = f"{arr}/.zarray"
-            if key not in md:
-                raise KeyError(
-                    f"consolidated metadata at {group_path} has no entry for"
-                    f" required array {arr!r} ({key} missing) — the store's"
-                    f" .zmetadata is stale or the group layout is not the"
-                    f" flat AnnData shape this reader expects"
-                )
-            return _validate_v2_meta(md[key], f"{group_path}:{arr}")
-
-        def _matrix(arr: str):
-            if md is not None:
-                meta = _consolidated_meta(arr)
-                return _plan_matrix_read(spark, os.path.join(group_path, arr), meta)
-            return read_zarr_matrix(spark, os.path.join(group_path, arr))
-
-        def _vector(arr: str):
-            if md is not None:
-                meta = _consolidated_meta(arr)
-                return _plan_vector_read(spark, os.path.join(group_path, arr), meta)
-            return read_zarr_vector(spark, os.path.join(group_path, arr))
+        def attrs(node: str) -> dict:  # "" = the group itself
+            if md is None:
+                return read_group_attrs(os.path.join(group_path, node))
+            a = md.get(f"{node}/.zattrs" if node else ".zattrs", {})
+            return a if isinstance(a, dict) else {}
 
         if md is not None:
-            # Top-level arrays only (key shape "<name>/.zarray").  Nested
-            # nodes ("a/b/.zarray") would otherwise surface their first
-            # path segment as a member and then KeyError on the lookup of
-            # "<segment>/.zarray" below; this group layout is flat by
-            # construction (X + vec_id + obs_*/var_* siblings plus X's
-            # own CSR members when sparse), so nested keys are simply
-            # not members.
+            # Top-level arrays only (key shape "<name>/.zarray"): the
+            # layout is flat by construction, so nested nodes (X's own
+            # CSR members, "a/b/.zarray") are not members.
             members = sorted(
                 k.rsplit("/", 1)[0] for k in md if k.endswith("/.zarray") and k.count("/") == 1
             )
         else:
             members = sorted(os.listdir(group_path))
 
-        # Sparse X (AnnData csr_matrix encoding, r14 verdict #2): when the
-        # X node carries the encoding tag instead of a .zarray, decode the
-        # indptr/indices/data members and densify row-locally (zeros
-        # implicit on disk, explicit in the wide matrix; all-zero rows
-        # come back through the vec_id spine, which every row is in).
-        import json as _json
+        def named(prefix: str) -> dict[str, str]:
+            # "obs_" never matches "obsm_"/"obsp_" members, nor "var_"
+            # "varm_"/"raw_var_" ones
+            return {m[len(prefix):]: m for m in members if m.startswith(prefix)}
 
-        x_attrs_path = os.path.join(group_path, "X", ".zattrs")
-        x_csr_attrs = None
-        if md is not None:
-            a = md.get("X/.zattrs")
-            if isinstance(a, dict) and a.get("encoding-type") == "csr_matrix":
-                x_csr_attrs = a
-        elif os.path.exists(x_attrs_path):
-            with open(x_attrs_path) as fh:
-                a = _json.load(fh)
-            if a.get("encoding-type") == "csr_matrix":
-                x_csr_attrs = a
-        x_slices = None if x_csr_attrs is not None else _matrix("X")
-        ids = _vector("vec_id").select(
-            F.col("row"), F.col("value").alias("row_id")
-        )
-        # sibling obs_* 1-D arrays -> obs annotation columns ("obs_" the
-        # 4-char prefix never matches "obsm_" members: "obsm"[3] != "_")
-        obs = None
-        for entry in members:
-            if not entry.startswith("obs_"):
-                continue
-            col = _vector(entry).select(
-                "row", F.col("value").alias(entry[4:])
-            )
-            obs = col if obs is None else obs.join(col, "row")
-        if obs is not None:
-            obs = obs.join(ids, "row").drop("row")
-        var = None
-        for entry in members:
-            if not entry.startswith("var_"):
-                continue
-            col = _vector(entry).select(
-                (F.col("row") + 1).alias("pos"), F.col("value").alias(entry[4:])
-            )
-            var = col if var is None else var.join(col, "pos")
-        raw_var = None
-        for entry in members:
-            if not entry.startswith("raw_var_"):
-                continue
-            col = _vector(entry).select(
-                (F.col("row") + 1).alias("pos"), F.col("value").alias(entry[8:])
-            )
-            raw_var = col if raw_var is None else raw_var.join(col, "pos")
-        # reassemble full rows from (possibly column-chunked) slices
-        def _reassemble(slices):
-            coo = slices.select(
-                "row", "col0", F.posexplode("values").alias("p0", "v")
-            ).select("row", (F.col("col0") + F.col("p0") + 1).alias("pos"), "v")
-            wide = coo.groupBy("row").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "v"))), lambda s: s["v"]
-                ).alias("values")
-            )
-            return wide.join(ids, "row").select("row_id", "values")
-
-        if x_csr_attrs is not None:
-            from .sources.sparse import read_zarr_csr
-
-            n_cols = int(x_csr_attrs["shape"][1])
+        meta = functools.partial(member_meta, group_path, md)
+        read = functools.partial(read_zarr_rows, spark, group_path, meta)
+        x_attrs = attrs("X")
+        if x_attrs.get("encoding-type") == "csr_matrix":
+            # Sparse X (AnnData csr_matrix encoding): decode the
+            # indptr/indices/data members and densify row-locally (zeros
+            # implicit on disk, explicit in the wide matrix; all-zero rows
+            # come back through the vec_id spine, which every row is in).
+            n_obs, n_vars = (int(v) for v in x_attrs["shape"])
             entries = read_zarr_csr(spark, os.path.join(group_path, "X")).select(
                 F.col("row_id").alias("row"),
                 (F.col("col") + 1).alias("pos"),
@@ -359,88 +295,47 @@ class AnnFrame:
                 F.map_from_entries(F.collect_list(F.struct("pos", "v"))).alias("m")
             )
             dense = F.transform(
-                F.sequence(F.lit(1), F.lit(n_cols)),
+                F.sequence(F.lit(1), F.lit(n_vars)),
                 lambda p: F.coalesce(F.element_at("m", p), F.lit(0.0)),
             )
-            x = (
-                ids.join(maps, "row", "left")
-                .select("row_id", dense.alias("values"))
-            )
+            ids = read(n_obs, columns={"row_id": "vec_id"}, key="row")
+            x = ids.join(maps, "row", "left").select("row_id", dense.alias("values"))
         else:
-            x = _reassemble(x_slices)
-        # obsm_* 2-D members -> computed per-cell matrices (r14 verdict #1)
-        obsm = {
-            entry[5:]: _reassemble(_matrix(entry))
-            for entry in members
-            if entry.startswith("obsm_")
-        }
-        layers = {
-            entry[7:]: _reassemble(_matrix(entry))
-            for entry in members
-            if entry.startswith("layers_")
-        }
+            n_obs, n_vars = (int(v) for v in meta("X")["shape"])
+            x = read(n_obs, matrix="X", index="vec_id")
 
-        # varm_* 2-D members -> computed per-GENE matrices (r15: the
-        # loadings side, varm['PCs']).  Rows are gene positions, not cell
-        # ids, so reassembly keys on the row index directly (no vec_id
-        # spine join).
-        def _reassemble_pos(slices):
-            coo = slices.select(
-                "row", "col0", F.posexplode("values").alias("p0", "v")
-            ).select("row", (F.col("col0") + F.col("p0") + 1).alias("kp"), "v")
-            return coo.groupBy("row").agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("kp", "v"))), lambda s: s["v"]
-                ).alias("values")
-            ).select(F.col("row").alias("pos"), "values")
+        def genes(n_genes: int, prefix: str) -> DataFrame | None:
+            # var frames key on the 1-based gene pos (varm on the 0-based)
+            cols = named(prefix)
+            if not cols:
+                return None
+            return read(n_genes, columns=cols, key="pos").withColumn("pos", F.col("pos") + 1)
 
-        varm = {
-            entry[5:]: _reassemble_pos(_matrix(entry))
-            for entry in members
-            if entry.startswith("varm_")
-        }
-        # obsp_* csr_matrix subgroups -> sparse cell×cell COO (r15: the
-        # neighbor graph).  Subgroups are not flat .zarray members, so
-        # discovery keys on the encoding tag — nested "obsp_*/.zattrs" in
-        # the consolidated document, else the on-disk subgroup attrs.
-        obsp_names: list[str] = []
+        def matrices(prefix: str, n: int, **kw) -> dict[str, DataFrame]:
+            return {k: read(n, matrix=m, **kw) for k, m in named(prefix).items()}
+
+        obs = read(n_obs, index="vec_id", columns=named("obs_"))
+        var = genes(n_vars, "var_")
+        obsm = matrices("obsm_", n_obs, index="vec_id")
+        layers = matrices("layers_", n_obs, index="vec_id")
+        varm = matrices("varm_", n_vars, key="pos")
+        # obsp_* csr_matrix subgroups -> sparse cell×cell COO; they are
+        # not .zarray members, so discovery keys on the encoding tag
         if md is not None:
-            obsp_names = sorted(
-                k.split("/", 1)[0][5:]
-                for k in md
-                if k.startswith("obsp_")
-                and k.endswith("/.zattrs")
-                and k.count("/") == 1
-                and isinstance(md[k], dict)
-                and md[k].get("encoding-type") == "csr_matrix"
-            )
+            nodes = [k.split("/", 1)[0] for k in md if k.count("/") == 1 and k.endswith("/.zattrs")]
         else:
-            for entry in members:
-                if not entry.startswith("obsp_"):
-                    continue
-                apath = os.path.join(group_path, entry, ".zattrs")
-                if os.path.exists(apath):
-                    with open(apath) as fh:
-                        a = _json.load(fh)
-                    if a.get("encoding-type") == "csr_matrix":
-                        obsp_names.append(entry[5:])
-        obsp = {}
-        if obsp_names:
-            from .sources.sparse import read_zarr_csr
-
-            for name in obsp_names:
-                obsp[name] = read_zarr_csr(
-                    spark, os.path.join(group_path, f"obsp_{name}")
-                )
-        # uns from the group attributes (.zattrs; consolidated-aware)
-        from .sources.zarrv2 import read_group_attrs
-
-        attrs = md.get(".zattrs", {}) if md is not None else read_group_attrs(group_path)
-        uns = attrs.get("uns", {}) if isinstance(attrs, dict) else {}
+            nodes = members
+        obsp = {
+            node[5:]: read_zarr_csr(spark, os.path.join(group_path, node))
+            for node in sorted(nodes)
+            if node.startswith("obsp_") and attrs(node).get("encoding-type") == "csr_matrix"
+        }
+        uns = attrs("").get("uns", {})
         out = cls(x, obs, var, obsm, uns, layers, varm, obsp)
         # raw snapshot (AnnData .raw): a raw_X member + raw_var_* arrays
         if "raw_X" in members:
-            out.raw = cls(_reassemble(_matrix("raw_X")), None, raw_var)
+            raw_x = read(n_obs, matrix="raw_X", index="vec_id")
+            out.raw = cls(raw_x, None, genes(int(meta("raw_X")["shape"][1]), "raw_var_"))
         return out
 
     @classmethod

@@ -90,9 +90,6 @@ def _explicitly_set(spark: SparkSession, key: str) -> bool:
         builtin = _SPARK_BUILTIN_DEFAULTS.get(key)
         return current is not None and builtin is not None and str(current).lower() != builtin
 
-#: Back-compat alias (docs/tools referenced the combined dict).
-RUNTIME_CONFS = {**CORRECTNESS_CONFS, **PERF_CONFS}
-
 #: Sessions whose perf posture has been applied already.
 _perf_tuned: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
 
@@ -171,7 +168,7 @@ def get_spark(
     )
     for k, v in (extra_confs or {}).items():
         builder = builder.config(k, str(v))
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**CORRECTNESS_CONFS, **PERF_CONFS}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

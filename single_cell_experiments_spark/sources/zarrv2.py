@@ -21,10 +21,15 @@ Spark-first mapping (same shape as ``chunkstore.py``):
   IS the chunk-aligned repartition; each task scatters its rows into a
   padded chunk block and writes one object per array.  No driver
   collection (the driver writes only the small JSON metadata).
-- **read**: driver parses ``.zarray`` (one small JSON; on a cluster this
-  is one storage GET), then ``spark.read.format("binaryFile")`` lists the
-  chunk objects across tasks and ``mapInPandas`` decompresses + decodes
-  each block columnar-side, trimming edge padding via the array shape.
+- **read**: the driver parses ``.zmetadata`` or each ``.zarray`` (small
+  JSON, one storage GET) and plans the row-chunk grid from it alone:
+  ``spark.range(n_row_chunks)`` then one ``mapInPandas`` whose task opens
+  its row chunk's objects of every member read together and yields
+  finished rows (``read_zarr_rows``, behind ``AnnFrame.from_zarr``) — no
+  listing, no shuffle, no join.  A chunk object absent from the store
+  reads as the array's ``fill_value`` (the spec rule).  The slice readers
+  ``read_zarr_matrix``/``read_zarr_vector`` list chunk objects with
+  ``binaryFile`` instead; both paths share one chunk decoder.
 
 Codecs: ``null`` (raw), ``zlib``, ``gzip`` (stdlib), and ``blosc`` — the
 zarr-python DEFAULT — via the pure-Python container codec in
@@ -38,6 +43,7 @@ matrices, whose obs axis is positional).
 
 from __future__ import annotations
 
+import base64
 import gzip
 import hashlib
 import json
@@ -45,7 +51,7 @@ import os
 import re
 import shutil
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -227,7 +233,7 @@ def write_zarr_group(
         [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
     )
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
         id_block = np.zeros(rows_per_chunk, dtype=np.dtype("<i8"))
@@ -305,7 +311,7 @@ def write_zarr_obsm_member(
     )
     result_schema = StructType([StructField("chunk_id", LongType())])
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         offs = pdf["row_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
         block = np.zeros((rows_per_chunk, dim), dtype=np.dtype("<f8"))
@@ -333,8 +339,8 @@ def write_group_attrs(group_path: str, attrs: dict) -> None:
 
 
 def read_group_attrs(group_path: str) -> dict:
-    """Read the group's ``.zattrs`` (``{}`` when absent — attrs are
-    optional in the spec)."""
+    """Read a group's (or any node's) ``.zattrs`` (``{}`` when absent —
+    attrs are optional in the spec)."""
     try:
         with open(os.path.join(group_path, ".zattrs")) as f:
             return json.load(f)
@@ -370,56 +376,55 @@ def _chunk_coords(file_path: str) -> tuple[int, ...]:
     return tuple(int(p) for p in name.split("."))
 
 
+def _decode_chunk(blob: bytes, meta: dict) -> np.ndarray:
+    """One chunk object -> its full (padded) block: decompress ->
+    ``np.frombuffer`` with the spec dtype -> reshape to the chunk shape in
+    the spec order.  The one decoder both readers share."""
+    return np.frombuffer(
+        _decompress(blob, meta.get("compressor")), dtype=np.dtype(meta["dtype"])
+    ).reshape(meta["chunks"], order=meta.get("order", "C"))
+
+
+def _as_column(vals: np.ndarray):
+    """1-D decoded values -> the column the readers emit: int64 for
+    integer dtypes, UTF-8 strings for fixed-width bytes (numpy strips the
+    trailing null padding on item access), float64 otherwise."""
+    kind = vals.dtype.kind
+    if kind in "iu":
+        return vals.astype(np.int64)
+    if kind == "S":
+        return [b.decode("utf-8") for b in vals]
+    return vals.astype(np.float64)
+
+
+def _column_type(meta: dict):
+    kind = np.dtype(meta["dtype"]).kind
+    return LongType() if kind in "iu" else StringType() if kind == "S" else DoubleType()
+
+
 def _decode_blocks(meta: dict):
     """mapInPandas decode closure over the (driver-parsed) array metadata.
 
-    Yields (row, <trimmed block rows>) for each chunk object: decompress →
-    ``np.frombuffer`` with the spec dtype → reshape to the chunk shape in
-    the spec order → trim edge padding via the array shape.
+    Yields (row, <trimmed block rows>) for each listed chunk object: the
+    shared ``_decode_chunk``, then trim edge padding via the array shape.
     """
     shape, chunks = meta["shape"], meta["chunks"]
-    dtype = np.dtype(meta["dtype"])
-    order = meta.get("order", "C")
-    compressor = meta.get("compressor")
     two_d = len(shape) == 2
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             for fpath, content in zip(pdf["path"], pdf["content"]):
                 coords = _chunk_coords(fpath)
-                block = np.frombuffer(
-                    _decompress(bytes(content), compressor), dtype=dtype
-                ).reshape(chunks, order=order)
+                block = _decode_chunk(bytes(content), meta)
                 row0 = coords[0] * chunks[0]
                 valid = min(chunks[0], shape[0] - row0)
                 rows = np.arange(row0, row0 + valid, dtype=np.int64)
                 if two_d:
                     col0 = coords[1] * chunks[1]
-                    vcols = min(chunks[1], shape[1] - col0)
-                    vals = block[:valid, :vcols].astype(np.float64)
-                    yield pd.DataFrame(
-                        {
-                            "row": rows,
-                            "col0": np.full(valid, col0, dtype=np.int64),
-                            "values": list(vals),
-                        }
-                    )
+                    vals = block[:valid, : shape[1] - col0].astype(np.float64)
+                    yield pd.DataFrame({"row": rows, "col0": col0, "values": list(vals)})
                 else:
-                    vals = block[:valid]
-                    if dtype.kind in "iu":
-                        yield pd.DataFrame(
-                            {"row": rows, "value": vals.astype(np.int64)}
-                        )
-                    elif dtype.kind == "S":
-                        # fixed-width bytes: numpy strips the trailing
-                        # null padding on item access; decode UTF-8
-                        yield pd.DataFrame(
-                            {"row": rows, "value": [b.decode("utf-8") for b in vals]}
-                        )
-                    else:
-                        yield pd.DataFrame(
-                            {"row": rows, "value": vals.astype(np.float64)}
-                        )
+                    yield pd.DataFrame({"row": rows, "value": _as_column(block[:valid])})
 
     return _decode
 
@@ -437,48 +442,139 @@ def read_zarr_matrix(spark: SparkSession, array_path: str) -> DataFrame:
     ``zarr_matrix_coo``; the registered ``zarr_colchunk_roundtrip`` query
     hash-checks this path end to end).
     """
-    return _plan_matrix_read(spark, array_path, read_zarray_meta(array_path))
-
-
-def _plan_matrix_read(spark: SparkSession, array_path: str, meta: dict) -> DataFrame:
-    if len(meta["shape"]) != 2:
-        raise ValueError(f"read_zarr_matrix expects a 2-D array, got {meta['shape']}")
-    schema = StructType(
-        [
-            StructField("row", LongType()),
-            StructField("col0", LongType()),
-            StructField("values", ArrayType(DoubleType())),
-        ]
-    )
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "[0-9]*")
-        .load(array_path)
-    )
-    return files.select("path", "content").mapInPandas(_decode_blocks(meta), schema=schema)
+    return _plan_listed_read(spark, array_path, read_zarray_meta(array_path), 2)
 
 
 def read_zarr_vector(spark: SparkSession, array_path: str) -> DataFrame:
-    """1-D Zarr v2 array -> (row: bigint, value: bigint|double) rows."""
-    return _plan_vector_read(spark, array_path, read_zarray_meta(array_path))
+    """1-D Zarr v2 array -> (row: bigint, value: bigint|double|string) rows."""
+    return _plan_listed_read(spark, array_path, read_zarray_meta(array_path), 1)
 
 
-def _plan_vector_read(spark: SparkSession, array_path: str, meta: dict) -> DataFrame:
-    if len(meta["shape"]) != 1:
-        raise ValueError(f"read_zarr_vector expects a 1-D array, got {meta['shape']}")
-    kind = np.dtype(meta["dtype"]).kind
-    vtype = (
-        LongType()
-        if kind in "iu"
-        else StringType() if kind == "S" else DoubleType()
-    )
-    schema = StructType([StructField("row", LongType()), StructField("value", vtype)])
+def _plan_listed_read(
+    spark: SparkSession, array_path: str, meta: dict, ndim: int
+) -> DataFrame:
+    """``binaryFile`` lists the chunk objects across tasks, then
+    ``_decode_blocks`` decodes each one."""
+    if len(meta["shape"]) != ndim:
+        kind = "matrix" if ndim == 2 else "vector"
+        raise ValueError(f"read_zarr_{kind} expects a {ndim}-D array, got {meta['shape']}")
+    if ndim == 2:
+        fields = [("col0", LongType()), ("values", ArrayType(DoubleType()))]
+    else:
+        fields = [("value", _column_type(meta))]
+    schema = StructType([StructField(n, t) for n, t in [("row", LongType()), *fields]])
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "[0-9]*")
         .load(array_path)
     )
     return files.select("path", "content").mapInPandas(_decode_blocks(meta), schema=schema)
+
+
+def _read_chunk(array_path: str, meta: dict, coords: tuple[int, ...]) -> np.ndarray:
+    """The full block at grid ``coords``.  A chunk object absent from the
+    store reads as the array's ``fill_value`` (the Zarr v2 rule;
+    zarr-python >= 2.11 omits all-fill chunks by default)."""
+    key = ".".join(str(c) for c in coords)
+    try:
+        with open(os.path.join(array_path, key), "rb") as fh:
+            return _decode_chunk(fh.read(), meta)
+    except FileNotFoundError:
+        pass
+    fill, dtype = meta.get("fill_value"), np.dtype(meta["dtype"])
+    if fill is None:
+        raise ValueError(
+            f"chunk {key!r} is missing from {array_path} and the array"
+            " declares fill_value null, so it has no defined contents"
+        )
+    if dtype.kind == "S":  # the spec stores a bytes fill as base64
+        fill = base64.b64decode(fill)
+    return np.full(meta["chunks"], fill, dtype=dtype)
+
+
+def read_zarr_rows(
+    spark: SparkSession,
+    group_path: str,
+    meta_of: Callable[[str], dict],
+    n_rows: int,
+    matrix: str | None = None,
+    index: str | None = None,
+    columns: dict[str, str] | None = None,
+    key: str = "row_id",
+) -> DataFrame:
+    """Row-aligned members of a group -> rows ``(key[, values], *columns)``
+    in one chunk-grid pass.  ``key`` is the ``index`` member's value (e.g.
+    ``vec_id``), else the row position; ``matrix`` (2-D) lands whole as
+    ``values array<double>``; ``columns`` maps output names to 1-D
+    members.  ``meta_of(member)`` gives validated metadata; a member
+    without ``n_rows`` rows raises ``ValueError`` naming it.
+
+    Plan: ``spark.range`` over the first member's row-chunk grid (one
+    partition per core, at most one per chunk) and one ``mapInPandas``.
+    Each row chunk's task decodes every column chunk of the matrix and
+    the chunks of each 1-D member overlapping its rows (chunk sizes may
+    differ per member), trims edge padding and yields finished rows.
+    """
+    columns = columns or {}
+    names = [n for n in (matrix, index) if n] + list(columns.values())
+    metas = {n: meta_of(n) for n in names}
+    for n, m in metas.items():
+        if len(m["shape"]) != (2 if n == matrix else 1) or int(m["shape"][0]) != n_rows:
+            raise ValueError(
+                f"{group_path}: member {n!r} has shape {m['shape']}, expected"
+                f" {n_rows} rows along the axis it annotates"
+            )
+    grid = int(metas[names[0]]["chunks"][0])
+    n_chunks = -(-n_rows // grid)
+    schema = StructType(
+        [StructField(key, LongType())]
+        + ([StructField("values", ArrayType(DoubleType()))] if matrix else [])
+        + [StructField(c, _column_type(metas[n])) for c, n in columns.items()]
+    )
+
+    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # the last chunk row decoded per member: a 1-D chunk taller than
+        # the grid serves several consecutive row chunks of this task
+        last: dict[str, tuple[int, np.ndarray]] = {}
+
+        def chunk_row(name: str, i: int) -> np.ndarray:
+            if name in last and last[name][0] == i:
+                return last[name][1]
+            meta, path = metas[name], os.path.join(group_path, name)
+            shape, chunks = meta["shape"], meta["chunks"]
+            if len(shape) == 1:
+                block = _read_chunk(path, meta, (i,))
+            else:
+                n_col_chunks = -(-int(shape[1]) // int(chunks[1]))
+                block = np.concatenate(
+                    [_read_chunk(path, meta, (i, j)) for j in range(n_col_chunks)], axis=1
+                )[:, : shape[1]]
+            last[name] = (i, block)
+            return block
+
+        def rows(name: str, r0: int, r1: int) -> np.ndarray:
+            c = int(metas[name]["chunks"][0])
+            return np.concatenate(
+                [
+                    chunk_row(name, i)[max(r0 - i * c, 0) : r1 - i * c]
+                    for i in range(r0 // c, (r1 - 1) // c + 1)
+                ]
+            )
+
+        for pdf in batches:
+            for ci in pdf["id"]:
+                r0 = int(ci) * grid
+                r1 = min(r0 + grid, n_rows)
+                ids = rows(index, r0, r1) if index else np.arange(r0, r1)
+                out = {key: ids.astype(np.int64)}
+                if matrix:
+                    out["values"] = list(rows(matrix, r0, r1).astype(np.float64))
+                for c, n in columns.items():
+                    out[c] = _as_column(rows(n, r0, r1))
+                yield pd.DataFrame(out)
+
+    n_parts = max(1, min(spark.sparkContext.defaultParallelism, n_chunks))
+    return spark.range(n_chunks, numPartitions=n_parts).mapInPandas(_decode, schema=schema)
 
 
 _ZARR_ROUNDTRIP_ORACLE = """
@@ -666,11 +762,18 @@ def read_consolidated_meta(group_path: str) -> dict:
     return md
 
 
-def _consolidated_array_meta(group_path: str, array: str) -> dict:
-    md = read_consolidated_meta(group_path)
+def member_meta(group_path: str, md: dict | None, array: str) -> dict:
+    """A member array's validated metadata: from the group's parsed
+    ``.zmetadata`` ``md``, or from the member's ``.zarray`` when ``md`` is
+    None (unconsolidated group)."""
+    if md is None:
+        return read_zarray_meta(os.path.join(group_path, array))
     key = f"{array}/.zarray"
     if key not in md:
-        raise KeyError(f"array {array!r} not in consolidated metadata ({group_path})")
+        raise KeyError(
+            f"array {array!r} not in consolidated metadata ({group_path}): the"
+            " .zmetadata is stale or the group is not the flat AnnData layout"
+        )
     return _validate_v2_meta(md[key], f"{group_path}:{key}")
 
 
@@ -680,16 +783,16 @@ def read_zarr_matrix_consolidated(
     """``read_zarr_matrix`` planned from the group's ``.zmetadata`` —
     zero per-array metadata reads (the member ``.zarray`` is never
     opened); chunk objects are still listed and decoded executor-side."""
-    meta = _consolidated_array_meta(group_path, array)
-    return _plan_matrix_read(spark, os.path.join(group_path, array), meta)
+    meta = member_meta(group_path, read_consolidated_meta(group_path), array)
+    return _plan_listed_read(spark, os.path.join(group_path, array), meta, 2)
 
 
 def read_zarr_vector_consolidated(
     spark: SparkSession, group_path: str, array: str
 ) -> DataFrame:
     """``read_zarr_vector`` planned from the group's ``.zmetadata``."""
-    meta = _consolidated_array_meta(group_path, array)
-    return _plan_vector_read(spark, os.path.join(group_path, array), meta)
+    meta = member_meta(group_path, read_consolidated_meta(group_path), array)
+    return _plan_listed_read(spark, os.path.join(group_path, array), meta, 1)
 
 
 @query(
@@ -1171,7 +1274,7 @@ def append_zarr_rows(
         [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
     )
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         x_file = os.path.join(x_path, f"{chunk_id}.0")
         id_file = os.path.join(id_path, f"{chunk_id}")

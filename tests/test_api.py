@@ -953,3 +953,76 @@ def test_raw_snapshot_survives_subset_and_roundtrip(spark, tmp_path):
     want = af.x.where(F.col("row_id") == 0).collect()[0]["values"]
     got = back.raw.x.where(F.col("row_id") == 0).collect()[0]["values"]
     assert list(got) == [float(v) for v in want]
+
+
+def _x_rows(af: AnnFrame) -> dict:
+    return {int(r["row_id"]): list(r["values"]) for r in af.x.collect()}
+
+
+def test_from_zarr_column_chunked_matches_row_chunked_in_one_pass(spark, tmp_path):
+    """from_zarr over a column-chunked grid (edge-padded on the row axis)
+    equals the row-chunked read, and both plan X as one shuffle-free
+    mapInPandas over the chunk grid."""
+    from single_cell_experiments_spark.plans import inspect
+    from single_cell_experiments_spark.sources.zarrv2 import write_zarr_group
+
+    e = load_table(spark, SF_DIR, "embeddings").where(F.col("vec_id") < 63)
+    by_rows, by_grid = str(tmp_path / "rows"), str(tmp_path / "grid")
+    write_zarr_group(e, by_rows)
+    write_zarr_group(e, by_grid, rows_per_chunk=2, cols_per_chunk=2)
+    a, b = AnnFrame.from_zarr(spark, by_rows), AnnFrame.from_zarr(spark, by_grid)
+    want = _x_rows(a)
+    assert len(want) == 63
+    assert _x_rows(b) == want
+    for af in (a, b):
+        assert inspect.exchange_count(af.x) == 0
+        assert inspect.executed_plan(af.x).count("MapInPandas") == 1
+
+
+def test_from_zarr_reads_missing_chunk_as_fill_value(spark, tmp_path):
+    """Zarr v2: a chunk object absent from the store reads as the array's
+    fill_value (zarr-python omits all-fill chunks) — the rows stay, filled;
+    an array declaring fill_value null cannot be filled and refuses."""
+    import os
+
+    af = _af(spark)
+    store = str(tmp_path / "grp")
+    af.to_zarr(store)
+    want = _x_rows(AnnFrame.from_zarr(spark, store))
+    os.remove(os.path.join(store, "X", "1.0"))
+    got = _x_rows(AnnFrame.from_zarr(spark, store))
+    assert len(got) == len(want) == af.n_obs
+    for r in range(64, 128):
+        assert got[r] == [0.0] * len(want[r])
+    assert all(got[r] == want[r] for r in want if not 64 <= r < 128)
+
+    strs = AnnFrame.from_table(
+        load_table(spark, SF_DIR, "embeddings").select(
+            "vec_id", "embedding", F.col("vec_id").cast("string").alias("name")
+        )
+    )
+    store2 = str(tmp_path / "grp_str")
+    strs.to_zarr(store2)
+    os.remove(os.path.join(store2, "obs_name", "0"))
+    with pytest.raises(Exception, match="fill_value null"):
+        AnnFrame.from_zarr(spark, store2).obs.collect()
+
+
+def test_from_zarr_rejects_annotation_length_mismatch(spark, tmp_path):
+    """An obs_*/var_* member whose length disagrees with X's row/gene count
+    raises naming the member, instead of silently dropping rows."""
+    import json
+    import os
+
+    af = _af(spark).filter_genes(min_cells=1, expr_threshold=0.1).reindex()
+    for member in ("obs_label", "var_n_cells"):
+        store = str(tmp_path / member)
+        af.to_zarr(store)
+        zpath = os.path.join(store, member, ".zarray")
+        with open(zpath) as fh:
+            meta = json.load(fh)
+        meta["shape"] = [meta["shape"][0] - 1]
+        with open(zpath, "w") as fh:
+            json.dump(meta, fh)
+        with pytest.raises(ValueError, match=member):
+            AnnFrame.from_zarr(spark, store)
