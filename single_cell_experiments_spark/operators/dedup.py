@@ -28,11 +28,14 @@ agree bit-for-bit.  At 100 TB you'd swap the shingle hash for the built-in
 ``xxhash64`` (JVM-side, faster, no oracle twin) — a one-line change noted
 per query.
 
-Scale shape (MinHash): shingling is a row-local explode; signatures are one
-groupBy(doc) with H min-aggregates (partial agg collapses map-side);
-banding re-keys O(docs×bands) tiny rows; the bucket self-join only explodes
-within a bucket (that *is* LSH); verification joins only candidate pairs.
-No step is quadratic in the corpus.
+Scale shape (MinHash): on Spark, shingling, the sorted distinct shingle set
+and the H min-hashes are array expressions on each document's own row —
+one checkpoint of ``(doc_id, hs, mh0..mh11)`` behind a single doc_id
+repartition (``lsh_pairs_staged``; the DuckDB oracles keep the relational
+explode → DISTINCT → groupBy form, which yields the same sets); banding
+projects that checkpoint into O(docs×bands) tiny rows; the bucket self-join
+only explodes within a bucket (that *is* LSH); verification joins only
+candidate pairs.  No step is quadratic in the corpus.
 """
 
 from __future__ import annotations
@@ -56,11 +59,21 @@ MINHASH_COEF = [
 ]
 BANDS, ROWS_PER_BAND = 3, 4
 MINHASH_JACCARD_MIN = 0.15
+#: minimum max-directional containment to emit a pair.
+CONTAINMENT_MIN = 0.5
 SIMHASH_BITS = 16
 SIMHASH_MAX_HAMMING = 3
 TRIGRAM_JACCARD_MIN = 0.15
 
 _POW31 = [31 ** (SHINGLE_K - 1 - i) for i in range(SHINGLE_K)]
+
+
+def _poly_hash_sql(cp) -> str:
+    """Polynomial hash of 5 consecutive codepoints, as SQL; ``cp(i)`` is
+    the BIGINT codepoint expression at offset ``i`` (0..4)."""
+    return "(" + " + ".join(
+        f"{cp(i)}*{w}" if w > 1 else cp(i) for i, w in enumerate(_POW31)
+    ) + ")"
 
 
 def _shingle_hash_sql(char_fn: str, text: str = "text", p: str = "p") -> str:
@@ -69,13 +82,7 @@ def _shingle_hash_sql(char_fn: str, text: str = "text", p: str = "p") -> str:
     Codepoints are cast to BIGINT before the multiply: CJK codepoints
     (~2e4) times 31^4 overflow INT32, which Spark's ANSI mode rejects.
     """
-    terms = [
-        f"CAST({char_fn}(substr({text}, {p}+{i}, 1)) AS BIGINT)*{w}"
-        if w > 1
-        else f"CAST({char_fn}(substr({text}, {p}+{i}, 1)) AS BIGINT)"
-        for i, w in enumerate(_POW31)
-    ]
-    return "(" + " + ".join(terms) + ")"
+    return _poly_hash_sql(lambda i: f"CAST({char_fn}(substr({text}, {p}+{i}, 1)) AS BIGINT)")
 
 
 _SPARK_SHINGLES = f"""
@@ -93,6 +100,32 @@ FROM (SELECT doc_id, text, unnest(range(1, length(text) - {SHINGLE_K - 2})) AS p
 _MH_AGGS = ",\n       ".join(
     f"MIN(({a}*h + {b}) % {MERSENNE31}) AS mh{i}" for i, (a, b) in enumerate(MINHASH_COEF)
 )
+
+
+def _spark_docsig_sql(docs: str) -> str:
+    """Row-local Spark twin of ``shingles → sigs → docsets``: one row
+    ``(doc_id, hs, mh0..mh11)`` per document of at least ``SHINGLE_K``
+    chars, with ``hs`` its sorted distinct shingle hashes.  Each codepoint
+    is read once (``cp``) and every shingle hash is the same polynomial
+    over it, so ``hs`` is exactly the doc's DISTINCT ``(doc_id, h)`` rows
+    and ``array_min`` over it is the ``MIN`` aggregate of ``_MH_AGGS``."""
+    mh = ",\n       ".join(
+        f"array_min(transform(hs, h -> ({a}*h + {b}) % {MERSENNE31})) AS mh{i}"
+        for i, (a, b) in enumerate(MINHASH_COEF)
+    )
+    return f"""
+SELECT doc_id, hs,
+       {mh}
+FROM (SELECT doc_id,
+             array_sort(array_distinct(transform(sequence(0, size(cp) - {SHINGLE_K}),
+               p -> {_poly_hash_sql(lambda i: f"cp[p + {i}]")}))) AS hs
+      FROM (SELECT doc_id,
+                   transform(sequence(1, length(text)),
+                     k -> CAST(ascii(substr(text, k, 1)) AS BIGINT)) AS cp
+            FROM {docs} WHERE length(text) >= {SHINGLE_K}))
+"""
+
+
 def _band_sig_exprs(bands: int, rows_per_band: int) -> list[str]:
     """Band-signature SQL expressions over the H=12 minhash columns:
     band b = the concat of its ``rows_per_band`` consecutive minhashes.
@@ -154,10 +187,91 @@ LSH_BUCKET_CAP = 2000
 #: broadcast semi-join docsets restriction (``lsh_pairs_staged``): 20M
 #: BIGINT ids ≈ 160 MB framed — inside the guide's "a few hundred MB is
 #: usually fine" broadcast envelope (§3.1) and far under the 8 GB /
-#: 512M-row hard cap.  Past this the builder keeps the unrestricted
-#: shape: an un-broadcast semi-join re-shuffles the whole shingle set
-#: (measured net loss at the 30× stress — see the builder docstring).
+#: 512M-row hard cap; the broadcast is the DISTINCT id set the count
+#: was taken over.  Past this the builder keeps the unrestricted shape:
+#: an un-broadcast semi-join re-shuffles the heavy side (measured net
+#: loss at the 30× stress — see the builder docstring).
 LSH_VERIFY_IDS_BROADCAST_MAX = 20_000_000
+
+
+def _band_rows_sql(sigs: str, band_sigs: list[str] | None = None) -> str:
+    """One ``(doc_id, band, sig)`` row per doc and band over ``sigs``."""
+    return " UNION ALL ".join(
+        f"SELECT doc_id, {b} AS band, {sig} AS sig FROM {sigs}"
+        for b, sig in enumerate(band_sigs if band_sigs is not None else _BAND_SIGS)
+    )
+
+
+def _lsh_cand_sql(bands: str, cap: int, star: bool) -> str:
+    """``bcap, bandsok, cand`` (plus ``bover, star, cand_all`` when
+    ``star``) CTEs over the ``bands`` relation: the size-capped banded
+    self-join and the over-cap STAR-SALVAGE tier (see ``_lsh_star_sql``)."""
+    star_ctes = (
+        f""",
+bover AS (SELECT band, sig, MIN(doc_id) AS ex FROM {bands} GROUP BY band, sig
+          HAVING COUNT(*) > {cap}),
+star AS (
+  SELECT DISTINCT o.ex AS doc1, b.doc_id AS doc2
+  FROM {bands} b JOIN bover o ON o.band = b.band AND o.sig = b.sig
+  WHERE b.doc_id <> o.ex
+),
+cand_all AS (
+  SELECT doc1, doc2, MIN(via_star) AS via_star
+  FROM (SELECT doc1, doc2, 0 AS via_star FROM cand
+        UNION ALL SELECT doc1, doc2, 1 AS via_star FROM star) u
+  GROUP BY doc1, doc2
+)"""
+        if star
+        else ""
+    )
+    return f"""bcap AS (SELECT band, sig FROM {bands} GROUP BY band, sig
+         HAVING COUNT(*) <= {cap}),
+bandsok AS (
+  SELECT b.doc_id, b.band, b.sig
+  FROM {bands} b JOIN bcap c ON c.band = b.band AND c.sig = b.sig
+),
+cand AS (
+  SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
+  FROM bandsok b1 JOIN bandsok b2
+    ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
+){star_ctes}"""
+
+
+def _lsh_inter_sql(docsets: str, star: bool, ln: str) -> str:
+    """The ``inter`` CTE: each candidate pair's intersection count and set
+    sizes from the ``(doc_id, hs)`` sorted arrays of ``docsets``."""
+    return f"""inter AS (
+  SELECT c.doc1, c.doc2{", c.via_star" if star else ""},
+         CAST({ln}(array_intersect(a1.hs, a2.hs)) AS BIGINT) AS i,
+         CAST({ln}(a1.hs) AS BIGINT) AS n1,
+         CAST({ln}(a2.hs) AS BIGINT) AS n2
+  FROM {"cand_all" if star else "cand"} c
+  JOIN {docsets} a1 ON a1.doc_id = c.doc1
+  JOIN {docsets} a2 ON a2.doc_id = c.doc2
+)"""
+
+
+def _jaccard_tail_sql(star: bool = False) -> str:
+    """Jaccard scoring tail over ``inter`` (``via_star`` kept when ``star``)."""
+    via = ",\n       CAST(i.via_star AS BIGINT) AS via_star" if star else ""
+    return f"""
+SELECT i.doc1, i.doc2,
+       round(CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i), 6) AS jaccard{via}
+FROM inter i
+WHERE CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i) >= {MINHASH_JACCARD_MIN}
+"""
+
+
+def _containment_tail_sql() -> str:
+    """Asymmetric containment scoring tail over ``inter``."""
+    return f"""
+SELECT i.doc1, i.doc2,
+       round(CAST(i.i AS DOUBLE) / i.n1, 6) AS c_fwd,
+       round(CAST(i.i AS DOUBLE) / i.n2, 6) AS c_rev,
+       CAST(CASE WHEN i.n1 <= i.n2 THEN i.doc1 ELSE i.doc2 END AS BIGINT) AS contained_doc
+FROM inter i
+WHERE CAST(i.i AS DOUBLE) / LEAST(i.n1, i.n2) >= {CONTAINMENT_MIN}
+"""
 
 
 def _lsh_core_sql(
@@ -198,56 +312,14 @@ def _lsh_core_sql(
     Counts are bit-identical to the explode-join by construction
     (distinct elements both sides, order-insensitive intersection)."""
     cap = LSH_BUCKET_CAP if cap is None else int(cap)
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {sig} AS sig FROM sigs"
-        for b, sig in enumerate(band_sigs if band_sigs is not None else _BAND_SIGS)
-    )
-    star_ctes = (
-        f""",
-bover AS (SELECT band, sig, MIN(doc_id) AS ex FROM bands GROUP BY band, sig
-          HAVING COUNT(*) > {cap}),
-star AS (
-  SELECT DISTINCT o.ex AS doc1, b.doc_id AS doc2
-  FROM bands b JOIN bover o ON o.band = b.band AND o.sig = b.sig
-  WHERE b.doc_id <> o.ex
-),
-cand_all AS (
-  SELECT doc1, doc2, MIN(via_star) AS via_star
-  FROM (SELECT doc1, doc2, 0 AS via_star FROM cand
-        UNION ALL SELECT doc1, doc2, 1 AS via_star FROM star) u
-  GROUP BY doc1, doc2
-)"""
-        if star
-        else ""
-    )
-    inter_src = "cand_all" if star else "cand"
-    via_sel = ", c.via_star" if star else ""
     return f"""
 WITH shingles_raw AS ({shingles_cte}),
 shingles AS (SELECT DISTINCT doc_id, h FROM shingles_raw),
 sigs AS (SELECT doc_id, {_MH_AGGS} FROM shingles GROUP BY doc_id),
-bands AS ({band_rows}),
-bcap AS (SELECT band, sig FROM bands GROUP BY band, sig
-         HAVING COUNT(*) <= {cap}),
-bandsok AS (
-  SELECT b.doc_id, b.band, b.sig
-  FROM bands b JOIN bcap c ON c.band = b.band AND c.sig = b.sig
-),
-cand AS (
-  SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
-  FROM bandsok b1 JOIN bandsok b2
-    ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
-){star_ctes},
+bands AS ({_band_rows_sql("sigs", band_sigs)}),
+{_lsh_cand_sql("bands", cap, star)},
 docsets AS (SELECT doc_id, array_sort(array_agg(h)) AS hs FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2{via_sel},
-         CAST({ln}(array_intersect(a1.hs, a2.hs)) AS BIGINT) AS i,
-         CAST({ln}(a1.hs) AS BIGINT) AS n1,
-         CAST({ln}(a2.hs) AS BIGINT) AS n2
-  FROM {inter_src} c
-  JOIN docsets a1 ON a1.doc_id = c.doc1
-  JOIN docsets a2 ON a2.doc_id = c.doc2
-)"""
+{_lsh_inter_sql("docsets", star, ln)}"""
 
 
 #: per-invocation temp-view namespace for the staged Spark LSH cascade
@@ -264,182 +336,102 @@ def lsh_pairs_staged(
     star: bool = False,
     score: str = "jaccard",
 ) -> DataFrame:
-    """Spark execution twin of ``_lsh_core_sql`` + the Jaccard tail with
-    the shared cascade MATERIALIZED once (r14 verdict #5 — make the 100×
-    run cheaper).  Semantics are identical to the single-statement
-    ``_minhash_sql``/``_lsh_star_sql`` (same fragment texts, same
-    DISTINCT/cap/star rules — the DuckDB oracles are unchanged); what
-    changes is the Spark PLAN:
+    """Spark execution twin of ``_lsh_core_sql`` + a scoring tail with
+    the shared cascade MATERIALIZED (r14 verdict #5 — make the 100× run
+    cheaper).  Semantics are identical to the single-statement
+    ``_minhash_sql``/``_lsh_star_sql``/``_containment_sql`` (the same
+    ``_lsh_cand_sql``/``_lsh_inter_sql`` fragments and scoring tails,
+    same DISTINCT/cap/star rules — the DuckDB oracles are unchanged);
+    what changes is the Spark PLAN:
 
     - DuckDB honors ``AS MATERIALIZED``, but Spark inlines deterministic
       CTEs at every reference — so the one-statement form re-executes the
       shingles→sigs→bands cascade inside EVERY broadcast-subquery build
       (measured at the 30× stress: three full cascade re-runs of
-      800-1,340 s each before this function existed).  Here ``shingles``,
-      ``bands``, and ``docsets`` are ``materialize()``d once behind
-      nonce temp views and every downstream CTE reads the views.
-    - The docs input is REPARTITIONED before the 300×-amplifying shingle
-      explode: the synthesized stress corpus is one ~84 MB parquet file
-      → one input split → the whole cascade single-task without this
-      (the repartition is one O(docs) exchange, standard
-      repartition-before-explode).
-    - The verify tier only ever reads ``docsets`` rows for docs that
-      appear in a candidate pair (the ``inter`` joins are inner on
-      doc1/doc2), and every candidate doc — plain (bandsok self-join,
-      bucket ≥ 2 members) or star (bover, bucket > cap ≥ 2) — sits in
-      some bucket shared with another doc.  So ``docsets`` — the
-      shingle→sorted-array aggregation, the widest payload in the
-      cascade — is built behind a BROADCAST LEFT SEMI join on "docs in
-      a ≥2-member bucket" (r16, guide §2.3/§3.2: drop non-matching rows
-      from the heavy side before it shuffles).  Lossless by the
-      superset argument above.  The restriction is ADAPTIVE: one scalar
-      probe job over the already-checkpointed bands view counts the
-      shareable docs, and the semi-join is applied only when that count
-      fits ``LSH_VERIFY_IDS_BROADCAST_MAX`` — a broadcast filter is then
-      pure map-side row-dropping (no extra exchange), so any shrink is
-      a win.  Past the cap the builder keeps the unrestricted r15 shape:
-      an un-broadcast semi-join re-shuffles the full shingle set, which
-      MEASURED as a net loss on the dup-dense 30× stress (shuffle write
-      345→501 MB, wall 235→253 s, SMJ LeftSemi in the plan) — exactly
-      the regime where ~every doc is shareable and the restriction buys
-      nothing.  On a dup-poor corpus (the realistic 100 TB regime) the
-      shareable set is the near-dup fraction, comfortably under the cap,
-      and the verify aggregation shrinks proportionally.  (Beyond the
-      cap on a dup-poor corpus the production extension is a Bloom
-      filter over the shareable ids, guide §3.2 — not expressible in
-      public PySpark without a Scala helper; the fallback stays
-      lossless.)
+      800-1,340 s each before this function existed).  Here the cascade
+      is checkpointed behind nonce temp views that every downstream CTE
+      reads.
+    - ONE row-local pass per document replaces the shingles DISTINCT,
+      the signature groupBy and the docsets groupBy
+      (``_spark_docsig_sql``): each doc's codepoints are read once, its
+      sorted distinct shingle hashes ``hs`` and the 12 minhashes are
+      array expressions on the doc's own row, and the one checkpoint is
+      ``(doc_id, hs, mh0..mh11)``.  Identical values by construction:
+      MIN over a doc's distinct ``(doc_id, h)`` rows is ``array_min`` of
+      its distinct array, and ``array_sort(array_agg(h))`` over those
+      rows is ``array_sort(array_distinct(...))``.  The bands are a
+      projection of that checkpoint, not a checkpoint of their own.
+    - The docs input is REPARTITIONED by ``doc_id`` first: the
+      synthesized stress corpus is one ~84 MB parquet file → one input
+      split → the whole cascade single-task without this.
+    - The verify tier only ever reads ``hs`` for docs that appear in a
+      candidate pair (the ``inter`` joins are inner on doc1/doc2), and
+      every candidate doc — plain (bandsok self-join, bucket ≥ 2
+      members) or star (bover, bucket > cap ≥ 2) — sits in some bucket
+      shared with another doc.  So the set of those SHAREABLE doc ids is
+      checkpointed once (DISTINCT), its row count riding that same job
+      as an ``observe`` metric, and when the count fits
+      ``LSH_VERIFY_IDS_BROADCAST_MAX`` the verify side is the signature
+      checkpoint behind a BROADCAST LEFT SEMI join on exactly that set
+      (guide §2.3/§3.2: drop non-matching rows from the heavy side
+      before it shuffles; lossless by the superset argument above).  The
+      broadcast payload is the set the probe counted.  Past the cap the
+      verify side stays unrestricted: an un-broadcast semi-join
+      re-shuffles the heavy side, which MEASURED as a net loss on the
+      dup-dense 30× stress (shuffle write 345→501 MB, wall 235→253 s) —
+      exactly the regime where ~every doc is shareable and the
+      restriction buys nothing.  (Beyond the cap on a dup-poor corpus the
+      production extension is a Bloom filter over the shareable ids,
+      guide §3.2 — not expressible in public PySpark without a Scala
+      helper; the fallback stays lossless.)
 
     ``score`` selects the verification tail over the same staged
-    cascade: ``"jaccard"`` (the default, ``_minhash_sql``'s tail) or
-    ``"containment"`` (``_containment_sql``'s asymmetric tail — r16,
-    the last one-statement Spark LSH consumer brought onto the staged
-    cascade; fragment texts unchanged, DuckDB oracle untouched).
+    cascade: ``"jaccard"`` (``_jaccard_tail_sql``) or ``"containment"``
+    (``_containment_tail_sql``); anything else raises ``ValueError``.
 
     Returns (doc1, doc2, jaccard[, via_star]) exactly as the one-statement
     builders do — or (doc1, doc2, c_fwd, c_rev, contained_doc) for the
     containment tail."""
+    if score == "jaccard":
+        tail_sql = _jaccard_tail_sql(star)
+    elif score == "containment":
+        tail_sql = _containment_tail_sql()
+    else:
+        raise ValueError(f"score must be 'jaccard' or 'containment', not {score!r}")
     cap = LSH_BUCKET_CAP if cap is None else int(cap)
-    sigs_list = band_sigs if band_sigs is not None else _BAND_SIGS
     p = f"__lsh{next(_LSH_STAGE_NONCE)}_"
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     created = []
 
-    def mv(df: DataFrame, name: str) -> DataFrame:
-        m = materialize(df)
-        m.createOrReplaceTempView(name)
+    def view(df: DataFrame, name: str) -> None:
+        df.createOrReplaceTempView(name)
         created.append(name)
-        return m
 
-    docs.select("doc_id", "text").repartition(n_part, "doc_id").createOrReplaceTempView(
-        f"{p}docs"
-    )
-    created.append(f"{p}docs")
-    shingles_raw = _SPARK_SHINGLES.replace("__docs", f"{p}docs")
-    mv(
-        spark.sql(f"SELECT DISTINCT doc_id, h FROM ({shingles_raw})"),
-        f"{p}sh",
-    )
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {sig} AS sig FROM {p}sigs"
-        for b, sig in enumerate(sigs_list)
-    )
-    mv(
-        spark.sql(
-            f"WITH {p}sigs AS (SELECT doc_id, {_MH_AGGS} FROM {p}sh GROUP BY doc_id)\n"
-            f"SELECT * FROM ({band_rows})"
-        ),
-        f"{p}bands",
-    )
-    # Adaptive verify restriction (see docstring): one scalar probe over
-    # the checkpointed bands decides whether the shareable-doc id list is
-    # small enough to broadcast; only then is the semi-join worth it.
-    n_shared = spark.sql(
+    view(docs.select("doc_id", "text").repartition(n_part, "doc_id"), f"{p}docs")
+    view(materialize(spark.sql(_spark_docsig_sql(f"{p}docs"))), f"{p}sig")
+    view(spark.sql(_band_rows_sql(f"{p}sig", band_sigs)), f"{p}bands")
+    obs = Observation(f"{p}shared")
+    shared = spark.sql(
         f"""
-SELECT COUNT(DISTINCT b.doc_id) AS c
+SELECT DISTINCT b.doc_id
 FROM {p}bands b
 JOIN (SELECT band, sig FROM {p}bands
       GROUP BY band, sig HAVING COUNT(*) >= 2) g
   ON g.band = b.band AND g.sig = b.sig
 """
-    ).collect()[0][0]
-    if n_shared <= LSH_VERIFY_IDS_BROADCAST_MAX:
+    ).observe(obs, F.count(F.lit(1)).alias("n"))
+    view(materialize(shared), f"{p}shared")
+    if obs.get["n"] <= LSH_VERIFY_IDS_BROADCAST_MAX:
         docsets_sql = f"""
-SELECT /*+ BROADCAST(c) */ s.doc_id, array_sort(array_agg(s.h)) AS hs
-FROM {p}sh s
-LEFT SEMI JOIN (
-  SELECT b.doc_id
-  FROM {p}bands b
-  JOIN (SELECT band, sig FROM {p}bands
-        GROUP BY band, sig HAVING COUNT(*) >= 2) g
-    ON g.band = b.band AND g.sig = b.sig
-) c ON s.doc_id = c.doc_id
-GROUP BY s.doc_id
-"""
+SELECT /*+ BROADCAST(c) */ s.doc_id, s.hs
+FROM {p}sig s LEFT SEMI JOIN {p}shared c ON s.doc_id = c.doc_id"""
     else:
-        docsets_sql = (
-            f"SELECT doc_id, array_sort(array_agg(h)) AS hs FROM {p}sh GROUP BY doc_id"
-        )
-    mv(spark.sql(docsets_sql), f"{p}docsets")
-    star_ctes = (
-        f""",
-bover AS (SELECT band, sig, MIN(doc_id) AS ex FROM {p}bands GROUP BY band, sig
-          HAVING COUNT(*) > {cap}),
-star AS (
-  SELECT DISTINCT o.ex AS doc1, b.doc_id AS doc2
-  FROM {p}bands b JOIN bover o ON o.band = b.band AND o.sig = b.sig
-  WHERE b.doc_id <> o.ex
-),
-cand_all AS (
-  SELECT doc1, doc2, MIN(via_star) AS via_star
-  FROM (SELECT doc1, doc2, 0 AS via_star FROM cand
-        UNION ALL SELECT doc1, doc2, 1 AS via_star FROM star) u
-  GROUP BY doc1, doc2
-)"""
-        if star
-        else ""
-    )
-    inter_src = "cand_all" if star else "cand"
-    via_sel = ", c.via_star" if star else ""
-    via_out = ",\n       CAST(i.via_star AS BIGINT) AS via_star" if star else ""
-    if score == "containment":
-        score_sql = f"""
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / i.n1, 6) AS c_fwd,
-       round(CAST(i.i AS DOUBLE) / i.n2, 6) AS c_rev,
-       CAST(CASE WHEN i.n1 <= i.n2 THEN i.doc1 ELSE i.doc2 END AS BIGINT) AS contained_doc
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / LEAST(i.n1, i.n2) >= {CONTAINMENT_MIN}"""
-    else:
-        score_sql = f"""
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i), 6) AS jaccard{via_out}
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i) >= {MINHASH_JACCARD_MIN}"""
+        docsets_sql = f"SELECT doc_id, hs FROM {p}sig"
+    view(spark.sql(docsets_sql), f"{p}docsets")
     tail = spark.sql(
         f"""
-WITH bcap AS (SELECT band, sig FROM {p}bands GROUP BY band, sig
-         HAVING COUNT(*) <= {cap}),
-bandsok AS (
-  SELECT b.doc_id, b.band, b.sig
-  FROM {p}bands b JOIN bcap c ON c.band = b.band AND c.sig = b.sig
-),
-cand AS (
-  SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
-  FROM bandsok b1 JOIN bandsok b2
-    ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
-){star_ctes},
-inter AS (
-  SELECT c.doc1, c.doc2{via_sel},
-         CAST(size(array_intersect(a1.hs, a2.hs)) AS BIGINT) AS i,
-         CAST(size(a1.hs) AS BIGINT) AS n1,
-         CAST(size(a2.hs) AS BIGINT) AS n2
-  FROM {inter_src} c
-  JOIN {p}docsets a1 ON a1.doc_id = c.doc1
-  JOIN {p}docsets a2 ON a2.doc_id = c.doc2
-)
-{score_sql}
-"""
+WITH {_lsh_cand_sql(f"{p}bands", cap, star)},
+{_lsh_inter_sql(f"{p}docsets", star, "size")}{tail_sql}"""
     )
     for name in created:
         spark.catalog.dropTempView(name)
@@ -454,12 +446,7 @@ def _minhash_sql(
 ) -> str:
     """Dialect-shared core of the MinHash-LSH query (post-shingling).
     ``ln`` is the array-length token ('len' DuckDB, 'size' Spark)."""
-    return f"""{_lsh_core_sql(shingles_cte, cap=cap, band_sigs=band_sigs, ln=ln)}
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i), 6) AS jaccard
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i) >= {MINHASH_JACCARD_MIN}
-"""
+    return _lsh_core_sql(shingles_cte, cap=cap, band_sigs=band_sigs, ln=ln) + _jaccard_tail_sql()
 
 
 def _lsh_star_sql(
@@ -489,13 +476,8 @@ def _lsh_star_sql(
     bucket.  The candidate pipeline itself is ``_lsh_core_sql(star=True)``
     — one shared source of truth; only the scoring tail lives here.
     """
-    return f"""{_lsh_core_sql(shingles_cte, cap=cap, band_sigs=band_sigs, star=True, ln=ln)}
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i), 6) AS jaccard,
-       CAST(i.via_star AS BIGINT) AS via_star
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / (i.n1 + i.n2 - i.i) >= {MINHASH_JACCARD_MIN}
-"""
+    core = _lsh_core_sql(shingles_cte, cap=cap, band_sigs=band_sigs, star=True, ln=ln)
+    return core + _jaccard_tail_sql(star=True)
 
 
 @query(
@@ -536,15 +518,11 @@ def _lsh_bucket_audit_sql(
     unusual corpus scale a user runs this FIRST and tunes ``cap`` with
     numbers instead of discovering silent recall loss later."""
     cap = LSH_BUCKET_CAP if cap is None else int(cap)
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {sig} AS sig FROM sigs"
-        for b, sig in enumerate(band_sigs if band_sigs is not None else _BAND_SIGS)
-    )
     return f"""
 WITH shingles_raw AS ({shingles_cte}),
 shingles AS (SELECT DISTINCT doc_id, h FROM shingles_raw),
 sigs AS (SELECT doc_id, {_MH_AGGS} FROM shingles GROUP BY doc_id),
-bands AS ({band_rows}),
+bands AS ({_band_rows_sql("sigs", band_sigs)}),
 buckets AS (SELECT band, sig, COUNT(*) AS n FROM bands GROUP BY band, sig)
 SELECT band,
        CAST(COUNT(*) AS BIGINT) AS n_buckets,
@@ -577,22 +555,12 @@ def dedup_lsh_bucket_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_lsh_bucket_audit_sql(_SPARK_SHINGLES, "div"))
 
 
-#: minimum max-directional containment to emit a pair.
-CONTAINMENT_MIN = 0.5
-
 
 def _containment_sql(shingles_cte: str, ln: str = "len") -> str:
     """Containment scoring over the LSH candidate set: |A∩B|/|A| and
     |A∩B|/|B| — the asymmetric near-dup measure (quotes, subsets,
     boilerplate wrappers) that symmetric Jaccard under-reports."""
-    return f"""{_lsh_core_sql(shingles_cte, ln=ln)}
-SELECT i.doc1, i.doc2,
-       round(CAST(i.i AS DOUBLE) / i.n1, 6) AS c_fwd,
-       round(CAST(i.i AS DOUBLE) / i.n2, 6) AS c_rev,
-       CAST(CASE WHEN i.n1 <= i.n2 THEN i.doc1 ELSE i.doc2 END AS BIGINT) AS contained_doc
-FROM inter i
-WHERE CAST(i.i AS DOUBLE) / LEAST(i.n1, i.n2) >= {CONTAINMENT_MIN}
-"""
+    return _lsh_core_sql(shingles_cte, ln=ln) + _containment_tail_sql()
 
 
 # --- exact dedup ---------------------------------------------------------------
@@ -930,6 +898,72 @@ SELECT id AS doc_id, lbl AS component_id FROM lchecked
 """
 
 
+def cc_min_labels(pairs: DataFrame) -> DataFrame:
+    """Min-label propagation over a ``(doc1, doc2)`` pair list with
+    ``doc1 < doc2`` and no repeated pair (the LSH pair contract),
+    returning ``(doc_id, component_id)`` with ``component_id`` the
+    smallest doc id reachable from ``doc_id``.
+
+    Vertex-centric (Pregel) form: the state is one row per node,
+    ``(doc_id, component_id, nbrs)``, built by ONE groupBy over both
+    orientations of the pairs (distinct because the pairs are).  A round
+    explodes ``nbrs`` into ``(nbr, component_id)`` messages, unions them
+    with the state rows and runs ONE ``groupBy(doc_id)``: the min label,
+    plus the node's single non-null ``nbrs`` — so a round is one exchange
+    and no join.  Each ``nbrs`` array is bounded by construction: a node
+    pairs only with docs it shares a capped bucket with, at most
+    ``len(band_sigs) × LSH_BUCKET_CAP`` of them.
+
+    Σ component_id (exact decimal) is the fixpoint probe.  Propagation is
+    MONOTONE: every node's label is non-increasing, so two consecutive
+    rounds have equal sums iff no label changed — an EXACT test.  Every
+    sum, the initial one included, rides its checkpoint job as an
+    ``observe`` metric.  Labels settle in ≤ diameter rounds and the next
+    round confirms the fixpoint; raises ``RuntimeError`` when that takes
+    more than ``CC_MAX_ROUNDS`` rounds — silent non-convergence would
+    return wrong labels."""
+    probe = F.sum(F.col("component_id").cast("decimal(28,0)")).alias("s")
+    # Both orientations row-locally, not as a self-union: Union's
+    # constraint rewrite raises NoSuchElementException on the staged LSH
+    # plan (seen on PySpark 4.1).
+    both = pairs.select(
+        F.inline(F.array(
+            F.struct(F.col("doc1").alias("doc_id"), F.col("doc2").alias("nbr")),
+            F.struct(F.col("doc2").alias("doc_id"), F.col("doc1").alias("nbr")),
+        ))
+    )
+    obs = Observation("cc_probe_init")
+    state = materialize(
+        both.groupBy("doc_id")
+        .agg(F.collect_list("nbr").alias("nbrs"))
+        .select("doc_id", F.col("doc_id").alias("component_id"), "nbrs")
+        .observe(obs, probe)
+    )
+    prev_sum = obs.get["s"]
+    no_nbrs = F.lit(None).cast(state.schema["nbrs"].dataType).alias("nbrs")
+    for r in range(CC_MAX_ROUNDS):
+        msgs = state.select(F.explode("nbrs").alias("doc_id"), "component_id", no_nbrs)
+        obs = Observation(f"cc_probe_{r}")
+        state = materialize(
+            msgs.unionAll(state)
+            .groupBy("doc_id")
+            .agg(
+                F.min("component_id").alias("component_id"),
+                F.first("nbrs", ignorenulls=True).alias("nbrs"),
+            )
+            .observe(obs, probe)
+        )
+        cur_sum = obs.get["s"]
+        if cur_sum == prev_sum:
+            return state.select("doc_id", "component_id")
+        prev_sum = cur_sum
+    raise RuntimeError(
+        f"cc_min_labels: min-label propagation did not reach a fixpoint within "
+        f"{CC_MAX_ROUNDS} rounds (graph diameter exceeds cap); raising instead "
+        f"of returning unconverged component ids"
+    )
+
+
 @query("dedup_connected_components", oracle=_CC_ORACLE, tags=("dedup", "components", "iterative"))
 def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster canonicalization: connected components over the
@@ -938,14 +972,15 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the "canonical representative" every real dedup pipeline needs; pair
     lists alone can't pick one keeper per duplicate *cluster*).
 
-    Spark side: a driver-coordinated fixpoint loop of join+agg rounds
-    (labels converge in ≤ diameter rounds; ``session.materialize`` truncates
-    lineage each round so plans don't grow — reliable ``checkpoint()`` on
-    clusters via ``spark.sce.reliableCheckpoint``).  At 100 TB scale this
-    exact loop is the standard large-graph CC (or hand to
-    GraphFrames/Pregel); each round is one shuffle keyed on the node id.
-    Raises if the fixpoint is not reached within the round cap — silent
-    non-convergence would return wrong labels.
+    Spark side: the staged LSH cascade (``lsh_pairs_staged``) feeds
+    ``cc_min_labels``, a driver-coordinated fixpoint loop of one exchange
+    per round (labels converge in ≤ diameter rounds; ``session.materialize``
+    truncates lineage each round so plans don't grow — reliable
+    ``checkpoint()`` on clusters via ``spark.sce.reliableCheckpoint``).
+    At 100 TB scale this exact loop is the standard large-graph CC (or
+    hand to GraphFrames/Pregel); each round is one shuffle keyed on the
+    node id.  Raises if the fixpoint is not reached within
+    ``CC_MAX_ROUNDS``.
 
     Oracle: the SAME min-label propagation unrolled as ``CC_MAX_ROUNDS``
     materialized DuckDB CTE rounds (``_cc_labels_sql``) — one of the
@@ -954,56 +989,7 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     blew DuckDB temp disk on the sf0.1 dense graph; propagation keeps
     every intermediate at n rows.)
     """
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("doc1", "doc2")
-    edges = pairs.union(
-        pairs.select(F.col("doc2").alias("doc1"), F.col("doc1").alias("doc2"))
-    ).distinct()
-    edges = materialize(edges)
-
-    labels = edges.select(F.col("doc1").alias("doc_id")).distinct().withColumn(
-        "component_id", F.col("doc_id")
-    )
-
-    # Σ component_id (exact decimal) is the fixpoint probe.  Min-label
-    # propagation is MONOTONE: every node's label is non-increasing, so
-    # two consecutive rounds have equal sums iff no label changed — an
-    # EXACT test (r15 opt round, guide §2.4).  r16: the per-round sum now
-    # rides the round's OWN checkpoint job as an ``observe`` metric
-    # (CollectMetrics computes it while the blocks are written), so the
-    # separate probe job — one full scan + agg per round — is gone
-    # (guide §5, driver round-trips).
-    _probe = F.sum(F.col("component_id").cast("decimal(28,0)")).alias("s")
-    prev_sum = labels.agg(_probe).collect()[0][0]
-    max_rounds = CC_MAX_ROUNDS  # ≥ graph diameter; breaks early at fixpoint
-    converged = False
-    for r in range(max_rounds):
-        # min over (own label ∪ neighbor labels) in ONE join + ONE
-        # aggregation: the union row replaces the old second (left) join +
-        # least/coalesce recombination — one exchange fewer per round
-        # (r15 opt round, guide §2.4).
-        neighbor_lbl = edges.join(labels, edges.doc2 == labels.doc_id).select(
-            F.col("doc1").alias("doc_id"), "component_id"
-        )
-        obs = Observation(f"cc_probe_{r}")
-        updated = materialize(
-            neighbor_lbl.unionAll(labels)
-            .groupBy("doc_id")
-            .agg(F.min("component_id").alias("component_id"))
-            .observe(obs, _probe)
-        )
-        cur_sum = obs.get["s"]
-        labels = updated
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"dedup_connected_components: min-label propagation did not reach a "
-            f"fixpoint within {max_rounds} rounds (graph diameter exceeds cap); "
-            f"raising instead of returning unconverged component ids"
-        )
-    return labels
+    return cc_min_labels(dedup_minhash_lsh(spark, sf_dir).select("doc1", "doc2"))
 
 
 # --- connected components, O(log n) rounds: large-star / small-star ------------
@@ -1443,10 +1429,6 @@ def _minhash_quality_sql(shingles_cte: str, intdiv: str, ln: str = "len") -> str
     the same per-doc sorted-array ``array_intersect`` as
     ``_lsh_core_sql`` (r13 verdict #1) — no pair × shingle explode."""
     h = len(MINHASH_COEF)
-    band_rows = " UNION ALL ".join(
-        f"SELECT doc_id, {b} AS band, {sig} AS sig FROM sigs"
-        for b, sig in enumerate(_BAND_SIGS)
-    )
     n_match = " + ".join(
         f"(CASE WHEN s1.mh{i} = s2.mh{i} THEN 1 ELSE 0 END)" for i in range(h)
     )
@@ -1456,22 +1438,14 @@ def _minhash_quality_sql(shingles_cte: str, intdiv: str, ln: str = "len") -> str
 WITH shingles_raw AS ({shingles_cte}),
 shingles AS (SELECT DISTINCT doc_id, h FROM shingles_raw),
 sigs AS (SELECT doc_id, {_MH_AGGS} FROM shingles GROUP BY doc_id),
-bands AS ({band_rows}),
+bands AS ({_band_rows_sql("sigs")}),
 cand AS (
   SELECT DISTINCT b1.doc_id AS doc1, b2.doc_id AS doc2
   FROM bands b1 JOIN bands b2
     ON b1.band = b2.band AND b1.sig = b2.sig AND b1.doc_id < b2.doc_id
 ),
 docsets AS (SELECT doc_id, array_sort(array_agg(h)) AS hs FROM shingles GROUP BY doc_id),
-inter AS (
-  SELECT c.doc1, c.doc2,
-         CAST({ln}(array_intersect(a1.hs, a2.hs)) AS BIGINT) AS i,
-         CAST({ln}(a1.hs) AS BIGINT) AS n1,
-         CAST({ln}(a2.hs) AS BIGINT) AS n2
-  FROM cand c
-  JOIN docsets a1 ON a1.doc_id = c.doc1
-  JOIN docsets a2 ON a2.doc_id = c.doc2
-),
+{_lsh_inter_sql("docsets", False, ln)},
 est AS (
   SELECT c.doc1, c.doc2, ({n_match}) AS n_match
   FROM cand c

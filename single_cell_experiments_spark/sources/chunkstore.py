@@ -68,7 +68,7 @@ def write_chunk_store(wide: DataFrame, path: str, rows_per_chunk: int = ROWS_PER
         [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
     )
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         pdf = pdf.sort_values("vec_id")
         vec_ids = pdf["vec_id"].to_numpy(dtype=np.int64)

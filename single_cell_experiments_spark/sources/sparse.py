@@ -104,7 +104,7 @@ def _write_chunked_vectors(
     result_schema = StructType([StructField("chunk_id", LongType())])
     plan = [(src, apath, np.dtype(dt)) for src, apath, dt in specs]
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         offs = pdf["idx"].to_numpy(dtype=np.int64) - chunk_id * chunk
         for src, apath, npdt in plan:

@@ -702,7 +702,7 @@ def write_zarr_v3_group(
             inners.append(_encode_chain(part.tobytes(order="C"), codecs, typesize))
         return _encode_shard(inners, _DEFAULT_INDEX_CODECS, "end")
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
         valid = min(rows_per_chunk, n_rows - int(chunk_id) * rows_per_chunk)
@@ -1010,7 +1010,7 @@ def write_zarr_v3_dict_vector(
         [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
     )
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
         block = np.full(rows_per_chunk, -1, dtype=i8)
@@ -1144,7 +1144,7 @@ def write_zarr_v3_obsm_member(
     )
     result_schema = StructType([StructField("chunk_id", LongType())])
 
-    def _write_chunk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         (chunk_id,) = key
         offs = pdf["row_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
         block = np.zeros((rows_per_chunk, dim), dtype=f8)

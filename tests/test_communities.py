@@ -275,3 +275,71 @@ def test_batch_mixing_accounting(spark):
         assert 0 <= int(r.same_edges) <= int(r.n_edges) == SC_NEIGHBORS_K * nb
         assert int(r.exp_ppm) == 1000000 * (nb - 1) // (n - 1)
         assert int(r.excess_ppm) == int(r.obs_ppm) - int(r.exp_ppm)
+
+
+# --- dedup connected components: min-label propagation (cc_min_labels) -----
+
+#: jobs ``dedup_connected_components`` runs at sf0.01 in one job group on
+#: the test session, as measured (38).  Job counts are deterministic, so a
+#: job regression fails here the way a hash regression fails the oracle.
+CC_SF001_MAX_JOBS = 38
+
+
+def _cc(spark, pairs):
+    from single_cell_experiments_spark.operators.dedup import cc_min_labels
+
+    df = spark.createDataFrame(pairs, "doc1 long, doc2 long")
+    return {r.doc_id: r.component_id for r in cc_min_labels(df).collect()}
+
+
+def test_cc_path_graph_converges_in_diameter_plus_one_rounds(spark, monkeypatch):
+    """Path 0-1-…-5 (diameter 5): label 0 reaches node 5 in 5 rounds and
+    the 6th round confirms the fixpoint — so a cap of 6 rounds returns
+    every node labelled 0 and a cap of 5 raises."""
+    from single_cell_experiments_spark.operators import dedup
+
+    path = [(i, i + 1) for i in range(5)]
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 6)
+    assert _cc(spark, path) == {i: 0 for i in range(6)}
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 5)
+    with pytest.raises(RuntimeError, match="did not reach a fixpoint within 5 rounds"):
+        _cc(spark, path)
+
+
+def test_cc_labels_each_component_by_its_min_id(spark):
+    """Two components and a star: every node gets its component's min id;
+    nodes outside every pair do not appear."""
+    pairs = [(3, 7), (7, 9), (1, 9), (20, 21), (4, 30), (5, 30), (6, 30)]
+    assert _cc(spark, pairs) == {
+        1: 1, 3: 1, 7: 1, 9: 1, 20: 20, 21: 20, 4: 4, 5: 4, 6: 4, 30: 4,
+    }
+
+
+def test_cc_empty_pair_set_returns_no_rows(spark):
+    assert _cc(spark, []) == {}
+
+
+def test_cc_diameter_past_round_cap_raises(spark, monkeypatch):
+    from single_cell_experiments_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 3)
+    with pytest.raises(RuntimeError, match="within 3 rounds"):
+        _cc(spark, [(i, i + 1) for i in range(8)])
+
+
+def test_dedup_connected_components_job_count_bound(spark):
+    import os
+
+    from single_cell_experiments_spark.registry import fresh_fn
+
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    sc = spark.sparkContext
+    group = "test-cc-jobs"
+    sc.setJobGroup(group, "dedup_connected_components")
+    try:
+        df = fresh_fn("dedup_connected_components")(spark, sf)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup("", "")
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= CC_SF001_MAX_JOBS, jobs

@@ -139,3 +139,11 @@ def test_default_cap_star_equals_plain_minhash(spark):
     assert {(r.doc1, r.doc2, r.jaccard) for r in star} == {
         (r.doc1, r.doc2, r.jaccard) for r in plain
     }
+
+
+def test_staged_cascade_rejects_unknown_score(spark):
+    from single_cell_experiments_spark.operators.dedup import lsh_pairs_staged
+
+    docs = spark.createDataFrame(_docs())
+    with pytest.raises(ValueError, match="'contaiment'"):
+        lsh_pairs_staged(spark, docs, score="contaiment")
