@@ -418,8 +418,15 @@ class AnnFrame:
         sentinel, so the two are indistinguishable after a round-trip
         (the v3 dict-encoded path reserves code -1 if NULL fidelity
         matters)."""
-        from .sources.zarrv2 import write_zarr_group
+        from .sources.sparse import write_zarr_csr
+        from .sources.zarrv2 import (
+            _DEFAULT_COMPRESSOR,
+            write_group_attrs,
+            write_zarr_group,
+            write_zarr_obsm_member,
+        )
 
+        comp = kw.get("compressor", _DEFAULT_COMPRESSOR)
         numeric = ("bigint", "int", "smallint", "tinyint", "long", "double", "float")
         writable = numeric + ("string",)
         obs_cols = tuple(
@@ -442,8 +449,6 @@ class AnnFrame:
             **kw,
         )
         if sparse:
-            from .sources.sparse import write_zarr_csr
-
             # X as the AnnData csr_matrix subgroup: nonzero entries only
             # (float32-quantized first, like the dense array's <f4 cells,
             # so both storage modes round-trip the same values)
@@ -466,17 +471,14 @@ class AnnFrame:
                 os.path.join(path, "X"),
                 int(info["shape"][0]),
                 int(info["shape"][1]),
-                compressor=kw.get("compressor", {"id": "zlib", "level": 1}),
+                compressor=comp,
             )
             info = {**info, "nnz": csr_info["nnz"], "x_encoding": "csr_matrix"}
         # var annotations are O(genes): written driver-side as var_* 1-D
         # arrays (the reference broadcasts var the same way — per-gene data
         # never needs a distributed write)
         if self.var is not None:
-            _write_var_arrays(
-                self.var, path, "var_", writable,
-                kw.get("compressor", {"id": "zlib", "level": 1}),
-            )
+            _write_var_arrays(self.var, path, "var_", writable, comp)
         # obsm members: computed per-cell matrices (X_pca / X_umap ...) as
         # 2-D float64 obsm_<name> arrays — distributed chunk writes like X
         # (r14 verdict #1: the write→compute→write cycle the notebook
@@ -484,13 +486,6 @@ class AnnFrame:
         if self.obsm or self.uns or self.layers or self.varm or self.obsp:
             import re
 
-            from .sources.zarrv2 import (
-                _DEFAULT_COMPRESSOR,
-                write_group_attrs,
-                write_zarr_obsm_member,
-            )
-
-            comp = kw.get("compressor", _DEFAULT_COMPRESSOR)
             n_rows = int(info["shape"][0])
             n_genes = int(info["shape"][1])
 
@@ -501,65 +496,53 @@ class AnnFrame:
                         " key (allowed: letters, digits, _ . -)"
                     )
 
-            for prefix, members in (("obsm", self.obsm), ("layers", self.layers)):
+            # varm members: per-GENE matrices (loadings, varm['PCs']) —
+            # rows are gene positions, so the member's row count is the
+            # matrix WIDTH; same distributed chunk writer, pos as row_id.
+            varm = {
+                k: v.select(F.col("pos").alias("row_id"), "values") for k, v in self.varm.items()
+            }
+            for prefix, members, n in (
+                ("obsm", self.obsm, n_rows),
+                ("layers", self.layers, n_rows),
+                ("varm", varm, n_genes),
+            ):
                 for name in sorted(members):
                     _check_key(prefix, name)
                     write_zarr_obsm_member(
                         members[name].select("row_id", "values"),
                         os.path.join(path, f"{prefix}_{name}"),
-                        n_rows,
+                        n,
                         rows_per_chunk=rows_per_chunk,
                         compressor=comp,
                     )
-            # varm members: per-GENE matrices (loadings, varm['PCs']) —
-            # rows are gene positions, so the member's row count is the
-            # matrix WIDTH; same distributed chunk writer, pos as row_id.
-            for name in sorted(self.varm):
-                _check_key("varm", name)
-                write_zarr_obsm_member(
-                    self.varm[name].select(
-                        F.col("pos").alias("row_id"), "values"
-                    ),
-                    os.path.join(path, f"varm_{name}"),
-                    n_genes,
-                    rows_per_chunk=rows_per_chunk,
-                    compressor=comp,
-                )
             # obsp members: sparse cell×cell pairwise matrices (the
             # neighbor graph) in the AnnData csr_matrix group encoding —
             # bytes ~ nnz (n·k for a kNN graph), never n² dense.
-            if self.obsp:
-                from .sources.sparse import write_zarr_csr
-
-                for name in sorted(self.obsp):
-                    _check_key("obsp", name)
-                    write_zarr_csr(
-                        self.obsp[name].select("row_id", "col", "v"),
-                        os.path.join(path, f"obsp_{name}"),
-                        n_rows,
-                        n_rows,
-                        compressor=kw.get("compressor", {"id": "zlib", "level": 1}),
-                    )
+            for name in sorted(self.obsp):
+                _check_key("obsp", name)
+                write_zarr_csr(
+                    self.obsp[name].select("row_id", "col", "v"),
+                    os.path.join(path, f"obsp_{name}"),
+                    n_rows,
+                    n_rows,
+                    compressor=comp,
+                )
             if self.uns:
                 write_group_attrs(path, {"uns": self.uns})
         # raw: the pre-subset snapshot (AnnData ``.raw``) — a full-width
         # float64 raw_X member (same distributed chunk writer; one row per
         # cell, width independent of X's) plus driver-side raw_var_* arrays.
         if self.raw is not None:
-            from .sources.zarrv2 import _DEFAULT_COMPRESSOR, write_zarr_obsm_member
-
             write_zarr_obsm_member(
                 self.raw.x.select("row_id", "values"),
                 os.path.join(path, "raw_X"),
                 int(info["shape"][0]),
                 rows_per_chunk=rows_per_chunk,
-                compressor=kw.get("compressor", _DEFAULT_COMPRESSOR),
+                compressor=comp,
             )
             if self.raw.var is not None:
-                _write_var_arrays(
-                    self.raw.var, path, "raw_var_", writable,
-                    kw.get("compressor", {"id": "zlib", "level": 1}),
-                )
+                _write_var_arrays(self.raw.var, path, "raw_var_", writable, comp)
         return info
 
     def reindex(self) -> "AnnFrame":

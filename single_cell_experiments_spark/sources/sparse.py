@@ -14,9 +14,11 @@ distributed chunk machinery as the dense writer (``zarrv2.py``):
   range-partitioned prefix-sum pattern (``api.AnnFrame.reindex``'s
   shape: per-partition totals to the driver, never O(rows) driver
   state), giving every entry its global FLAT position; (2) entries
-  keyed by ``flat div chunk`` → ``applyInPandas`` writes one
-  ``indices`` + one ``data`` chunk object per grid cell.  ``indptr``
-  is the same prefix-sum vector written through the same chunk writer.
+  keyed by ``flat div chunk`` go through the shared
+  ``chunkgrid.write_chunk_grid``, which writes one ``indices`` + one
+  ``data`` chunk object per grid cell.  ``indptr`` is the same
+  prefix-sum vector written through the same chunk writer; each
+  array's ``.zarray`` is written after its chunk job.
 - **read**: ``indptr`` rebuilds per-row extents with a self-join on
   ``i+1`` (equi-join, no global window), ``sequence``+``explode``
   enumerates each row's flat positions, and two flat-keyed equi-joins
@@ -35,18 +37,17 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StructField, StructType
 
 from ..catalog import load_table
 from ..registry import query
+from .chunkgrid import Member, write_chunk_grid
 from .zarrv2 import (
     _DEFAULT_COMPRESSOR,
-    _compress,
-    _write_zarray_meta,
+    _v2_meta,
+    _v2_put,
     read_zarr_vector,
 )
 
@@ -94,31 +95,13 @@ def _write_chunked_vectors(
     chunk: int,
     compressor: dict | None,
 ) -> int:
-    """Write one or more 1-D arrays in ONE distributed pass: ``entries``
-    carries (idx, <col per spec>); each spec is (src_col, array_path,
-    dtype in {'<i8','<f8'}).  Metadata is written driver-side first;
-    each ``applyInPandas`` task scatters its slice into padded blocks
-    and emits every array's chunk object for its grid cell."""
-    for _src, apath, dt in specs:
-        _write_zarray_meta(apath, [n], [chunk], dt, compressor, 0)
-    result_schema = StructType([StructField("chunk_id", LongType())])
-    plan = [(src, apath, np.dtype(dt)) for src, apath, dt in specs]
-
-    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["idx"].to_numpy(dtype=np.int64) - chunk_id * chunk
-        for src, apath, npdt in plan:
-            block = np.zeros(chunk, dtype=npdt)
-            block[offs] = pdf[src].to_numpy(dtype=npdt)
-            with open(os.path.join(apath, f"{chunk_id}"), "wb") as f:
-                f.write(_compress(block.tobytes(order="C"), compressor, npdt.itemsize))
-        return pd.DataFrame({"chunk_id": [chunk_id]})
-
-    return (
-        entries.withColumn("chunk_id", F.expr(f"idx div {chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
+    """Write one or more 1-D arrays in ONE ``write_chunk_grid`` pass:
+    ``entries`` carries (idx, <col per spec>); each spec is (src_col,
+    array_path, dtype in {'<i8','<f8'}); each ``.zarray`` is written
+    after the chunk job."""
+    members = [Member(apath, src, np.dtype(dt)) for src, apath, dt in specs]
+    return write_chunk_grid(
+        entries, "idx", n, chunk, members, _v2_put(compressor), _v2_meta(compressor)
     )
 
 

@@ -24,9 +24,12 @@ Zarr v3 layout (public spec, zarr-specs v3.0):
 
 Spark-first mapping — identical shape to ``zarrv2`` (one driver-side
 JSON GET for metadata; ``binaryFile`` + ``mapInPandas`` for the chunk
-grid; ``groupBy(chunk row) ⟶ applyInPandas`` for the chunk-aligned
-write), so the v3 module is metadata parsing + the codec chain, and the
-COO assembly (``zarrv2.zarr_matrix_coo``) is shared.  The nested
+grid), so the v3 module is metadata parsing + the codec chain, and the
+COO assembly (``zarrv2.zarr_matrix_coo``) is shared.  Every writer
+(group plain and sharded, dictionary vector, obsm member) is one call of
+the shared ``chunkgrid.write_chunk_grid``; ``_v3_put`` supplies the
+codec chain or shard packing and the key encoding, and ``zarr.json``
+documents are written only after the chunk job succeeds.  The nested
 ``c/0/1`` tree is listed with ``recursiveFileLookup`` — on object
 stores that is the same flat LIST the flat v2 layout needs.
 
@@ -70,6 +73,7 @@ from pyspark.sql.types import (
 
 from ..catalog import load_table
 from ..registry import query
+from .chunkgrid import Member, dense_rows, write_chunk_grid
 
 # --- crc32c (Castagnoli, reflected poly 0x82F63B78) ---------------------------
 
@@ -307,7 +311,7 @@ def _encode_chain(block: bytes, codecs: list[dict], typesize: int) -> bytes:
         if name in ("bytes", "transpose"):
             continue
         if name == "gzip":
-            block = gzip.compress(block, compresslevel=conf.get("level", 5))
+            block = gzip.compress(block, compresslevel=conf.get("level", 5), mtime=0)
         elif name == "blosc":
             shuffle = _V3_SHUFFLE.get(conf.get("shuffle", "noshuffle"), 0)
             if shuffle == 2:
@@ -578,6 +582,70 @@ _DEFAULT_INDEX_CODECS = [
 ]
 
 
+def _byteorder(codecs: list[dict]) -> str:
+    """The numpy byte-order prefix the chain's ``bytes`` codec asks for."""
+    endian = "little"
+    for codec in codecs:
+        if codec.get("name") == "bytes":
+            endian = (codec.get("configuration") or {}).get("endian", "little")
+    return "<" if endian == "little" else ">"
+
+
+def _v3_put(codecs: list[dict], keyenc: dict, shard_inner_rows: int | None = None):
+    """The v3 ``put`` for ``write_chunk_grid``: encode the block through
+    the codec chain — or, with ``shard_inner_rows``, encode each inner
+    row-slab and pack them behind the shard index, slabs wholly inside
+    the edge padding written as ABSENT — and name the object by the
+    key encoding."""
+
+    def put(path: str, coords: tuple[int, ...], block: np.ndarray, valid: int) -> None:
+        size = block.dtype.itemsize
+        if shard_inner_rows is None:
+            payload = _encode_chain(block.tobytes(), codecs, size)
+        else:
+            inners = [
+                None if r0 >= valid
+                else _encode_chain(block[r0 : r0 + shard_inner_rows].tobytes(), codecs, size)
+                for r0 in range(0, len(block), shard_inner_rows)
+            ]
+            payload = _encode_shard(inners, _DEFAULT_INDEX_CODECS, "end")
+        full = os.path.join(path, _chunk_key_v3(coords, keyenc))
+        os.makedirs(os.path.dirname(full), exist_ok=True)
+        with open(full, "wb") as f:
+            f.write(payload)
+
+    return put
+
+
+_V3_NAMES = {v: k for k, v in _V3_DTYPES.items()}  # "f4" -> "float32"
+
+
+def _v3_meta(
+    codecs: list[dict],
+    keyenc: dict,
+    shard_inner_rows: int | None = None,
+    attributes: dict | None = None,
+):
+    """The v3 ``meta`` for ``write_chunk_grid``: one ``zarr.json``, its
+    chain wrapped in ``sharding_indexed`` when the chunks are shards of
+    ``shard_inner_rows``-row inner chunks."""
+
+    def meta(m, shape: list[int], chunks: list[int]) -> None:
+        chain = codecs
+        if shard_inner_rows is not None:
+            conf = {
+                "chunk_shape": [shard_inner_rows, *chunks[1:]],
+                "codecs": codecs,
+                "index_codecs": _DEFAULT_INDEX_CODECS,
+                "index_location": "end",
+            }
+            chain = [{"name": "sharding_indexed", "configuration": conf}]
+        name = _V3_NAMES[m.dtype.str[1:]]
+        _write_v3_meta(m.path, shape, chunks, name, chain, m.fill, keyenc, attributes)
+
+    return meta
+
+
 def write_zarr_v3_group(
     wide: DataFrame,
     path: str,
@@ -612,125 +680,24 @@ def write_zarr_v3_group(
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
 
-    bounds = wide.agg(
-        F.max("vec_id").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
-        # countDistinct, not count: duplicate ids would otherwise offset
-        # missing ids and pass a count==max+1 check while the store gained
-        # zero-filled gap rows and last-write-wins collisions (r10 advice).
-        F.countDistinct("vec_id").alias("nd"),
-        F.max(F.size("embedding")).alias("dim"),
-    ).collect()[0]
-    n_rows, dim = int(bounds["mx"]) + 1, int(bounds["dim"])
-    if int(bounds["n"]) != n_rows or int(bounds["nd"]) != n_rows:
-        raise ValueError(
-            "zarr positional write needs dense 0..n-1 ids: "
-            f"max+1={n_rows}, rows={bounds['n']}, distinct={bounds['nd']}"
-        )
+    n_rows, bounds = dense_rows(wide, "vec_id", F.max(F.size("embedding")).alias("dim"))
+    dim = int(bounds["dim"])
     cpc = cols_per_chunk or dim
-    n_col_chunks = (dim + cpc - 1) // cpc
-
-    endian = "little"
-    for codec in codecs:
-        if codec.get("name") == "bytes":
-            endian = (codec.get("configuration") or {}).get("endian", "little")
-    f4 = np.dtype(("<" if endian == "little" else ">") + "f4")
-    i8 = np.dtype(("<" if endian == "little" else ">") + "i8")
-
-    def _array_codecs(inner_shape: list[int]) -> list[dict]:
-        if shard_inner_rows is None:
-            return codecs
-        return [
-            {
-                "name": "sharding_indexed",
-                "configuration": {
-                    "chunk_shape": inner_shape,
-                    "codecs": codecs,
-                    "index_codecs": _DEFAULT_INDEX_CODECS,
-                    "index_location": "end",
-                },
-            }
-        ]
-
-    x_path, id_path = os.path.join(path, "X"), os.path.join(path, "vec_id")
-    _write_v3_meta(
-        x_path,
-        [n_rows, dim],
-        [rows_per_chunk, cpc],
-        "float32",
-        _array_codecs([shard_inner_rows or rows_per_chunk, cpc]),
-        0.0,
-        keyenc,
-    )
-    _write_v3_meta(
-        id_path,
-        [n_rows],
-        [rows_per_chunk],
-        "int64",
-        _array_codecs([shard_inner_rows or rows_per_chunk]),
-        0,
-        keyenc,
+    bo = _byteorder(codecs)
+    members = [
+        Member(os.path.join(path, "X"), "embedding", np.dtype(bo + "f4"), 0.0, dim, cpc),
+        Member(os.path.join(path, "vec_id"), "vec_id", np.dtype(bo + "i8")),
+    ]
+    n_chunks = write_chunk_grid(
+        wide, "vec_id", n_rows, rows_per_chunk, members,
+        _v3_put(codecs, keyenc, shard_inner_rows), _v3_meta(codecs, keyenc, shard_inner_rows),
     )
     with open(os.path.join(path, "zarr.json"), "w") as f:
         json.dump({"zarr_format": 3, "node_type": "group", "attributes": {}}, f)
-
-    result_schema = StructType(
-        [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
-    )
-
-    def _put(root: str, coords: tuple[int, ...], payload: bytes) -> None:
-        key = _chunk_key_v3(coords, keyenc)
-        full = os.path.join(root, key)
-        os.makedirs(os.path.dirname(full), exist_ok=True)
-        with open(full, "wb") as f:
-            f.write(payload)
-
-    def _pack(block: np.ndarray, valid_rows: int, typesize: int) -> bytes:
-        """One outer chunk's payload: plain chain encode, or — sharded —
-        inner row-slabs encoded separately and packed behind the index,
-        with all-padding slabs written as ABSENT."""
-        if shard_inner_rows is None:
-            return _encode_chain(
-                np.ascontiguousarray(block).tobytes(order="C"), codecs, typesize
-            )
-        inners: list[bytes | None] = []
-        for r0 in range(0, rows_per_chunk, shard_inner_rows):
-            if r0 >= valid_rows:
-                inners.append(None)
-                continue
-            part = np.ascontiguousarray(block[r0 : r0 + shard_inner_rows])
-            inners.append(_encode_chain(part.tobytes(order="C"), codecs, typesize))
-        return _encode_shard(inners, _DEFAULT_INDEX_CODECS, "end")
-
-    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
-        valid = min(rows_per_chunk, n_rows - int(chunk_id) * rows_per_chunk)
-        x_block = np.zeros((rows_per_chunk, dim), dtype=f4)
-        x_block[offs] = np.array(pdf["embedding"].to_list(), dtype=np.float32)
-        id_block = np.zeros(rows_per_chunk, dtype=i8)
-        id_block[offs] = pdf["vec_id"].to_numpy(dtype=np.int64)
-        for c in range(n_col_chunks):
-            sub = x_block[:, c * cpc : (c + 1) * cpc]
-            if sub.shape[1] < cpc:  # right-edge chunk: pad per the spec
-                pad = np.zeros((rows_per_chunk, cpc), dtype=f4)
-                pad[:, : sub.shape[1]] = sub
-                sub = pad
-            _put(x_path, (int(chunk_id), c), _pack(sub, valid, 4))
-        _put(id_path, (int(chunk_id),), _pack(id_block, valid, 8))
-        return pd.DataFrame({"chunk_id": [chunk_id], "n_rows": [len(pdf)]})
-
-    n_chunks = (
-        wide.select("vec_id", "embedding")
-        .withColumn("chunk_id", F.expr(f"vec_id div {rows_per_chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
-    )
     return {
         "shape": [n_rows, dim],
         "chunks": [rows_per_chunk, cpc],
-        "n_chunks": int(n_chunks) * n_col_chunks,
+        "n_chunks": int(n_chunks) * ((dim + cpc - 1) // cpc),
     }
 
 
@@ -972,67 +939,18 @@ def write_zarr_v3_dict_vector(
     keyenc = keyenc if keyenc is not None else _DEFAULT_KEYENC
     shutil.rmtree(path, ignore_errors=True)
 
-    cats = sorted(
-        r[0] for r in vec.select("value").where(F.col("value").isNotNull()).distinct().collect()
-    )
+    n_rows, bounds = dense_rows(vec, "vec_id", F.collect_set("value").alias("cats"))
+    cats = sorted(bounds["cats"])
     code_of = {c: i for i, c in enumerate(cats)}
+    i8 = np.dtype(_byteorder(codecs) + "i8")
 
-    bounds = vec.agg(
-        F.max("vec_id").alias("mx"),
-        F.count(F.lit(1)).alias("n"),
-        F.countDistinct("vec_id").alias("nd"),
-    ).collect()[0]
-    n_rows = int(bounds["mx"]) + 1
-    if int(bounds["n"]) != n_rows or int(bounds["nd"]) != n_rows:
-        raise ValueError(
-            "zarr positional write needs dense 0..n-1 ids: "
-            f"max+1={n_rows}, rows={bounds['n']}, distinct={bounds['nd']}"
-        )
+    def _codes(col: pd.Series) -> np.ndarray:
+        return np.array([code_of.get(v, -1) if v is not None else -1 for v in col], dtype=i8)
 
-    endian = "little"
-    for codec in codecs:
-        if codec.get("name") == "bytes":
-            endian = (codec.get("configuration") or {}).get("endian", "little")
-    i8 = np.dtype(("<" if endian == "little" else ">") + "i8")
-
-    _write_v3_meta(
-        path,
-        [n_rows],
-        [rows_per_chunk],
-        "int64",
-        codecs,
-        -1,
-        keyenc,
-        attributes={"encoding": "dictionary", "categories": cats},
-    )
-
-    result_schema = StructType(
-        [StructField("chunk_id", LongType()), StructField("n_rows", LongType())]
-    )
-
-    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["vec_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
-        block = np.full(rows_per_chunk, -1, dtype=i8)
-        block[offs] = np.array(
-            [code_of.get(v, -1) if v is not None else -1 for v in pdf["value"]],
-            dtype=i8,
-        )
-        payload = _encode_chain(
-            np.ascontiguousarray(block).tobytes(order="C"), codecs, 8
-        )
-        keypath = os.path.join(path, _chunk_key_v3((int(chunk_id),), keyenc))
-        os.makedirs(os.path.dirname(keypath), exist_ok=True)
-        with open(keypath, "wb") as f:
-            f.write(payload)
-        return pd.DataFrame({"chunk_id": [chunk_id], "n_rows": [len(pdf)]})
-
-    n_chunks = (
-        vec.select("vec_id", "value")
-        .withColumn("chunk_id", F.expr(f"vec_id div {rows_per_chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
+    n_chunks = write_chunk_grid(
+        vec, "vec_id", n_rows, rows_per_chunk, [Member(path, "value", i8, -1, encode=_codes)],
+        _v3_put(codecs, keyenc),
+        _v3_meta(codecs, keyenc, attributes={"encoding": "dictionary", "categories": cats}),
     )
     return {"shape": [n_rows], "chunks": [rows_per_chunk], "n_chunks": int(n_chunks),
             "categories": cats}
@@ -1125,42 +1043,16 @@ def write_zarr_v3_obsm_member(
     ``zarr.json``."""
     codecs = codecs if codecs is not None else _DEFAULT_CODECS
     keyenc = keyenc if keyenc is not None else _DEFAULT_KEYENC
-    bounds = values.agg(
-        F.count(F.lit(1)).alias("n"), F.max(F.size("values")).alias("dim")
-    ).collect()[0]
-    if int(bounds["n"]) != n_rows:
-        raise ValueError(
-            f"obsm member must carry one row per cell: expected {n_rows},"
-            f" got {bounds['n']} (left-join to the obs index and fill first)"
-        )
-    dim = int(bounds["dim"])
-    endian = "little"
-    for codec in codecs:
-        if codec.get("name") == "bytes":
-            endian = (codec.get("configuration") or {}).get("endian", "little")
-    f8 = np.dtype(("<" if endian == "little" else ">") + "f8")
-    _write_v3_meta(
-        apath, [n_rows, dim], [rows_per_chunk, dim], "float64", codecs, 0.0, keyenc
+    from .zarrv2 import _PER_CELL
+
+    _, bounds = dense_rows(
+        values, "row_id", F.max(F.size("values")).alias("dim"), n=n_rows, what=_PER_CELL
     )
-    result_schema = StructType([StructField("chunk_id", LongType())])
-
-    def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        offs = pdf["row_id"].to_numpy(dtype=np.int64) - chunk_id * rows_per_chunk
-        block = np.zeros((rows_per_chunk, dim), dtype=f8)
-        block[offs] = np.array(pdf["values"].to_list(), dtype=np.float64)
-        key_path = os.path.join(apath, _chunk_key_v3((int(chunk_id), 0), keyenc))
-        os.makedirs(os.path.dirname(key_path), exist_ok=True)
-        with open(key_path, "wb") as f:
-            f.write(_encode_chain(block.tobytes(order="C"), codecs, 8))
-        return pd.DataFrame({"chunk_id": [chunk_id]})
-
-    n_chunks = (
-        values.select("row_id", "values")
-        .withColumn("chunk_id", F.expr(f"row_id div {rows_per_chunk}"))
-        .groupBy("chunk_id")
-        .applyInPandas(_write_chunk, schema=result_schema)
-        .count()
+    dim = int(bounds["dim"])
+    n_chunks = write_chunk_grid(
+        values, "row_id", n_rows, rows_per_chunk,
+        [Member(apath, "values", np.dtype(_byteorder(codecs) + "f8"), 0.0, dim)],
+        _v3_put(codecs, keyenc), _v3_meta(codecs, keyenc),
     )
     return {"shape": [n_rows, dim], "chunks": [rows_per_chunk, dim], "n_chunks": int(n_chunks)}
 
