@@ -1138,7 +1138,10 @@ class AnnFrame:
 
         ``cells`` plugs a coarse candidate generator into the kNN step
         exactly as in ``neighbors``; see ``lpa_labels`` /
-        ``louvain_phase1_labels`` for the per-round scale contracts."""
+        ``louvain_phase1_labels`` for the per-round scale contracts.
+        ``"louvain"`` runs that kernel's level 1 at γ = 1; the same
+        kernel takes a ``w`` column and ``selfmass`` for the coarsened
+        levels ``louvain_coarsen`` builds."""
         from .session import materialize
 
         if rounds is not None and rounds < 1:

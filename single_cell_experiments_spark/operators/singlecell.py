@@ -39,6 +39,8 @@ from __future__ import annotations
 import functools
 import itertools
 import math
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -1978,15 +1980,35 @@ def _gfac(n: int) -> str:
     return "" if n == 1 else f"{n} * "
 
 
+class _Level(NamedTuple):
+    """Names of one unrolled oracle level: its edge, degree and M tables,
+    the ``kuc`` aggregate of edge mass into a label, the CTE prefixes of
+    its label states and Q rows, and its best-round CTE."""
+
+    edges: str
+    deg: str
+    mm: str
+    kuc: str
+    lpfx: str
+    qpfx: str
+    best: str
+
+
+#: level 1 over the kNN ``edges``; level 2 over the coarsened supergraph
+#: ``sw`` of ``sc_communities_louvain2``.
+_LEVEL1 = _Level("edges", "deg", "mm", "COUNT(*)", "l", "q", "best")
+_LEVEL2 = _Level("sw", "deg2", "mm2", "SUM(e.w)", "w", "p", "best2")
+
+
 def _modularity_round_sql(
-    prev: str, name: str, phase: int, gnum: int = 1, gden: int = 1
+    lv: _Level, prev: str, name: str, phase: int, gnum: int = 1, gden: int = 1
 ) -> str:
     """One PHASE (id-parity half-round) of the modularity-greedy update
-    as a DuckDB CTE over ``edges`` (src, dst — symmetric, no
-    self-loops), ``deg`` (id, k) and ``mm`` (m = directed edge count =
-    2·|undirected edges|), mirroring ``louvain_phase1_labels``'s integer
-    score exactly (see there for the 2m²-scaled gain derivation, the
-    parity-phasing rationale, and the γ=γnum/γden resolution scaling)."""
+    as a DuckDB CTE over ``lv``'s edges (src, dst[, w] — symmetric, no
+    self-loops), degrees (id, k) and M (m = Σk, the directed edge mass),
+    mirroring ``louvain_phase1_labels``'s integer score exactly (see
+    there for the 2m²-scaled gain derivation, the parity-phasing
+    rationale, and the γ=γnum/γden resolution scaling)."""
     return f"""
 {name} AS MATERIALIZED (
   SELECT id, lbl FROM (
@@ -1995,27 +2017,27 @@ def _modularity_round_sql(
                               ORDER BY s.score DESC, s.clbl ASC) AS rn
     FROM (
       SELECT c.src, c.clbl,
-             {_gfac(gden)}mm.m * c.kuc
+             {_gfac(gden)}{lv.mm}.m * c.kuc
                - {_gfac(gnum)}du.k * (t.tot - CASE WHEN p.lbl = c.clbl
                                       THEN du.k ELSE 0 END) AS score
       FROM (
         SELECT src, clbl, MAX(kuc) AS kuc FROM (
-          SELECT e.src, pl.lbl AS clbl, CAST(COUNT(*) AS BIGINT) AS kuc
-          FROM edges e JOIN {prev} pl ON pl.id = e.dst
+          SELECT e.src, pl.lbl AS clbl, CAST({lv.kuc} AS BIGINT) AS kuc
+          FROM {lv.edges} e JOIN {prev} pl ON pl.id = e.dst
           GROUP BY e.src, pl.lbl
           UNION ALL
           SELECT id AS src, lbl AS clbl, CAST(0 AS BIGINT) AS kuc FROM {prev}
         ) GROUP BY src, clbl
       ) c
-      JOIN deg du ON du.id = c.src
+      JOIN {lv.deg} du ON du.id = c.src
       JOIN (SELECT p2.lbl AS clbl, CAST(SUM(d2.k) AS BIGINT) AS tot,
                    CAST(COUNT(*) AS BIGINT) AS csz
-            FROM {prev} p2 JOIN deg d2 ON d2.id = p2.id
+            FROM {prev} p2 JOIN {lv.deg} d2 ON d2.id = p2.id
             GROUP BY p2.lbl) t ON t.clbl = c.clbl
       JOIN (SELECT p3.id, p3.lbl,
                    COUNT(*) OVER (PARTITION BY p3.lbl) AS ocsz
             FROM {prev} p3) p ON p.id = c.src
-      CROSS JOIN mm
+      CROSS JOIN {lv.mm}
       WHERE c.src % 2 = {phase}
         AND (c.clbl = p.lbl
              OR NOT (p.ocsz = 1 AND t.csz = 1 AND c.clbl > p.lbl))
@@ -2026,19 +2048,69 @@ def _modularity_round_sql(
 )"""
 
 
-def _modularity_chain_sql(
-    n_rounds: int, gnum: int = 1, gden: int = 1
+def _modularity_qnum_sql(
+    lv: _Level, li: str, r: int, e_in: str, gnum: int = 1, gden: int = 1
+) -> str:
+    """Round r's integer modularity numerator γden·M·e_in − γnum·Σ tot(c)²
+    as a 1-row CTE — the best-state selection key (see
+    ``louvain_phase1_labels`` for the derivation); ``e_in`` is the
+    same-label edge mass of label state ``li``."""
+    return f"""
+{lv.qpfx}{r} AS MATERIALIZED (
+  SELECT {r} AS r,
+         {_gfac(gden)}(SELECT m FROM {lv.mm})
+           * {e_in}
+         - {_gfac(gnum)}(SELECT CAST(SUM(tot * tot) AS BIGINT) FROM (
+              SELECT CAST(SUM(d.k) AS BIGINT) AS tot
+              FROM {li} p JOIN {lv.deg} d ON d.id = p.id GROUP BY p.lbl) tt)
+         AS qn
+)"""
+
+
+def _same_label_sql(lv: _Level, li: str, indent: int) -> str:
+    """Same-label edge mass of label state ``li`` as a scalar subquery."""
+    nl = "\n" + " " * indent
+    return (
+        f"(SELECT CAST({lv.kuc} AS BIGINT) FROM {lv.edges} e"
+        f"{nl}JOIN {li} x ON x.id = e.src"
+        f"{nl}JOIN {li} y ON y.id = e.dst AND y.lbl = x.lbl)"
+    )
+
+
+def _modularity_level_sql(
+    lv: _Level, e_in: Callable[[str], str], gnum: int = 1, gden: int = 1
 ) -> tuple[str, str]:
-    """Unrolled modularity rounds, two parity phases per round (the
-    ``_lpa_chain_sql`` pattern: every phase MATERIALIZED — an inlined
-    CTE would re-run the full candidate scoring per downstream
-    reference)."""
-    rounds, prev = [], "l0"
-    for i in range(1, n_rounds + 1):
-        rounds.append(_modularity_round_sql(prev, f"l{i}a", 0, gnum, gden))
-        rounds.append(_modularity_round_sql(f"l{i}a", f"l{i}b", 1, gnum, gden))
-        prev = f"l{i}b"
-    return ",".join(rounds), prev
+    """One unrolled Louvain level over ``lv``'s tables: the singleton
+    start, two parity phases per round (the ``_lpa_chain_sql`` pattern:
+    every phase MATERIALIZED — an inlined CTE would re-run the full
+    candidate scoring per downstream reference), one Q row per recorded
+    state and the argmax-over-rounds ``best`` CTE.  Returns the CTEs and
+    the UNION that picks the best state's ``(id, lbl)`` rows."""
+    names = [f"{lv.lpfx}0"] + [
+        f"{lv.lpfx}{i}b" for i in range(1, SC_MODULARITY_ROUNDS + 1)
+    ]
+    rounds = []
+    for i in range(1, SC_MODULARITY_ROUNDS + 1):
+        mid = f"{lv.lpfx}{i}a"
+        rounds.append(_modularity_round_sql(lv, names[i - 1], mid, 0, gnum, gden))
+        rounds.append(_modularity_round_sql(lv, mid, names[i], 1, gnum, gden))
+    qctes = ",".join(
+        _modularity_qnum_sql(lv, nm, r, e_in(nm), gnum, gden)
+        for r, nm in enumerate(names)
+    )
+    qunion = " UNION ALL ".join(
+        f"SELECT * FROM {lv.qpfx}{r}" for r in range(len(names))
+    )
+    pick = " UNION ALL ".join(
+        f"SELECT id, lbl FROM {nm} WHERE {r} = (SELECT r FROM {lv.best})"
+        for r, nm in enumerate(names)
+    )
+    return f"""{names[0]} AS MATERIALIZED (SELECT id, id AS lbl FROM {lv.deg}),
+{",".join(rounds)},
+{qctes},
+{lv.best} AS MATERIALIZED (
+  SELECT r FROM ({qunion}) ORDER BY qn DESC, r ASC LIMIT 1
+)""", pick
 
 
 def louvain_phase1_labels(
@@ -2046,6 +2118,7 @@ def louvain_phase1_labels(
     max_rounds: int = SC_MODULARITY_ROUNDS,
     stats: dict | None = None,
     gamma: tuple[int, int] = (1, 1),
+    selfmass: DataFrame | None = None,
 ) -> DataFrame:
     """Deterministic PHASED-SYNCHRONOUS Louvain phase-1 (modularity-
     greedy label assignment) over a symmetric, self-loop-free
@@ -2072,9 +2145,7 @@ def louvain_phase1_labels(
     removed from its own community).  Multiplying by the positive
     constant 2m² and writing M = 2m (the directed edge count) gives
         score(u, c) = M·k_{u,c} − k_u·(Σtot(c) − [lbl_u = c]·k_u)
-    — pure BIGINT arithmetic on degree sums, hash-exact in any engine
-    and safe in int64 while M·max-degree < 2^63 (≈4.6e17 directed edges
-    at degree 20; switch the products to DECIMAL past that).
+    — pure BIGINT arithmetic on degree sums, hash-exact in any engine.
 
     RETURNS THE BEST STATE, NOT THE LAST: greedy parallel gain moves
     against a stale label view are not monotone in modularity (groups
@@ -2093,15 +2164,12 @@ def louvain_phase1_labels(
     heuristic (Lu/Halappanavar/Kalyanaraman 2015 §4.3 — a singleton may
     enter another SINGLETON's community only toward a smaller label,
     killing same-parity singleton swaps).  ``stats`` sink receives
-    ``{"rounds", "converged", "best_round", "best_qnum"}``.  The Q
-    numerator is exact int64 while M·e_in < 2^63; lift the products to
-    DECIMAL past ~10^9 directed edges per component of interest.
+    ``{"rounds", "converged", "best_round", "best_qnum"}``.
 
     Scale shape, per round: one dst-keyed join + (src, lbl) partial+
     final count for k_{u,c}; one O(communities) degree-sum aggregate;
     one bounded window per node (candidates ≤ degree+1) — no skewed
-    reducer, state O(nodes), never collected.  The M scalar rides a
-    1-row broadcast.
+    reducer, state O(nodes), never collected.  M is an inlined literal.
 
     ``gamma`` (r11) is the RESOLUTION parameter γ = γ_num/γ_den of the
     Reichardt–Bornholdt generalized modularity (the knob Scanpy's
@@ -2114,19 +2182,59 @@ def louvain_phase1_labels(
         Qnum_γ = γ_den·M·e_in − γ_num·Σ_c tot(c)².
     γ = 1/1 reproduces the classic scores bit-for-bit (the literal 1
     factors constant-fold away in Catalyst).
+
+    WEIGHTED levels (Louvain's level 2+ over a coarsened supergraph,
+    ``louvain_coarsen``): ``edges`` may carry an integer multi-edge
+    weight ``w`` (an edge without one counts 1), and ``selfmass``
+    ``(id, sm)`` gives each supernode its internal directed edge mass
+    (2× its collapsed internal undirected edges).  Degrees are
+    k(u) = Σ_out w + sm(u) over the ``src`` ∪ ``selfmass`` ids, so
+    M = Σk is EXACTLY the original graph's directed edge count — the
+    invariant that makes level-2 modularity directly comparable to
+    level-1's.  k_{u,c} is the edge weight from u into c (self-mass
+    moves with u and cancels across candidates), and the selection key
+    counts all self-mass as internal:
+        Qnum_γ = γ_den·M·(e_in + Σsm) − γ_num·Σ_c tot(c)².
+    With ``selfmass=None``, Σsm = 0.  Over the coarsened graph every
+    round is O(communities) rows, so every level after the first is
+    nearly free at any corpus size (the published Louvain observation
+    that level 1 dominates runtime).
+
+    int64 guard: every Spark product stays below 2^63 while
+    max(γ_num, γ_den)·M·k_max < 2^63 and Σtot² ≤ M² < 2^63.  The kernel
+    checks both against the M and k_max it collects before the first
+    round and raises ``ValueError`` past them.
     """
     gnum, gden = int(gamma[0]), int(gamma[1])
     if gnum <= 0 or gden <= 0:
         raise ValueError(f"gamma must be a positive rational, got {gamma}")
+    w = F.col("w").cast("long") if "w" in edges.columns else F.lit(1).cast("long")
+    # Degree table (id, k, sm): one aggregation over the edge rows and the
+    # self-mass rows, with sm riding along so Σsm needs no job of its own.
+    mass = edges.select(
+        F.col("src").alias("id"), w.alias("k"), F.lit(0).cast("long").alias("sm")
+    )
+    if selfmass is not None:
+        sm = F.col("sm").cast("long")
+        mass = mass.unionByName(selfmass.select("id", sm.alias("k"), sm.alias("sm")))
     deg = materialize(
-        edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("k"))
+        mass.groupBy("id").agg(F.sum("k").alias("k"), F.sum("sm").alias("sm"))
     )
     # M = Σk is a driver-known scalar: inline it as a LITERAL instead of the
     # previous per-phase crossJoin(broadcast(mm)) — the broadcast rebuilt the
     # degree aggregation from the raw edges on EVERY phase (r15 opt round:
     # one fewer aggregation pass + one fewer broadcast exchange per phase,
     # guide §2.4).
-    m_val = int(deg.agg(F.sum("k")).collect()[0][0])
+    # Σsm and k_max come back in the same collect.
+    m_val, sm_total, k_max = (
+        int(v) for v in deg.agg(F.sum("k"), F.sum("sm"), F.max("k")).collect()[0]
+    )
+    if max(gnum, gden) * m_val * k_max >= 2**63 or m_val * m_val >= 2**63:
+        raise ValueError(
+            f"louvain_phase1_labels: int64 scores overflow at M={m_val},"
+            f" k_max={k_max}, gamma={gnum}/{gden}; needs"
+            " max(gamma_num, gamma_den)*M*k_max < 2^63 and M^2 < 2^63"
+        )
 
     # Label state carries (id, lbl, k, moved): k riding in the state kills
     # the separate deg join per phase (one state join replaces the old
@@ -2139,13 +2247,13 @@ def louvain_phase1_labels(
 
     def _phase(st: DataFrame, phase: int, obs: Observation | None = None) -> DataFrame:
         # One aggregation builds the candidate set: neighbor-label rows
-        # count 1, the node's own "stay" row counts 0 — sum == the old
-        # two-level count-then-max (r15 opt round: one exchange instead of
-        # two below the scoring joins, guide §2.3 partial aggregation).
+        # count their edge weight, the node's own "stay" row counts 0, so
+        # one exchange sits below the scoring joins (guide §2.3 partial
+        # aggregation).
         nbr = (
             edges.join(st.select(F.col("id").alias("dst"), "lbl"), "dst")
             .where(F.col("src") % 2 == phase)
-            .select("src", F.col("lbl").alias("clbl"), F.lit(1).cast("long").alias("cnt"))
+            .select("src", F.col("lbl").alias("clbl"), w.alias("cnt"))
         )
         own = st.where(F.col("id") % 2 == phase).select(
             F.col("id").alias("src"),
@@ -2267,7 +2375,7 @@ def louvain_phase1_labels(
         .join(lb, ["dst", "r"])
         .where(F.col("la") == F.col("lb"))
         .groupBy("r")
-        .agg(F.count(F.lit(1)).alias("e_in"))
+        .agg(F.sum(w).alias("e_in"))
     )
     sumsq_df = (
         lab_all.groupBy("r", "lbl")
@@ -2279,7 +2387,7 @@ def louvain_phase1_labels(
     # left join: a round with zero same-label edges (round 0 on a
     # self-loop-free graph) has no e_in row — it contributes e_in = 0.
     for row in sumsq_df.join(e_in_df, "r", "left").collect():
-        e_in = int(row["e_in"]) if row["e_in"] is not None else 0
+        e_in = int(row["e_in"] or 0) + sm_total
         qnums[row["r"]] = gden * m_val * e_in - gnum * int(row["sumsq"])
     best_r = max(range(len(qnums)), key=lambda i: (qnums[i], -i))
     best_labels = hist[best_r]
@@ -2289,24 +2397,6 @@ def louvain_phase1_labels(
         stats["best_round"] = best_r
         stats["best_qnum"] = max(qnums)
     return best_labels.select("id", "lbl")
-
-
-def _modularity_qnum_sql(li: str, r: int, gnum: int = 1, gden: int = 1) -> str:
-    """Round r's integer modularity numerator γden·M·e_in − γnum·Σ tot(c)²
-    as a 1-row CTE — the best-state selection key (see
-    ``louvain_phase1_labels._qnum`` for the derivation)."""
-    return f"""
-q{r} AS MATERIALIZED (
-  SELECT {r} AS r,
-         {_gfac(gden)}(SELECT m FROM mm)
-           * (SELECT CAST(COUNT(*) AS BIGINT) FROM edges e
-              JOIN {li} x ON x.id = e.src
-              JOIN {li} y ON y.id = e.dst AND y.lbl = x.lbl)
-         - {_gfac(gnum)}(SELECT CAST(SUM(tot * tot) AS BIGINT) FROM (
-              SELECT CAST(SUM(d.k) AS BIGINT) AS tot
-              FROM {li} p JOIN deg d ON d.id = p.id GROUP BY p.lbl) tt)
-         AS qn
-)"""
 
 
 def _sc_modularity_prefix(
@@ -2321,15 +2411,8 @@ def _sc_modularity_prefix(
     ``pre_ctes`` injects CTEs the custom source depends on (e.g. the
     recipe chain for ``sc_notebook_e2e``) — both default to the exact
     byte-for-byte prefix the standalone community oracles pin."""
-    chain, _ = _modularity_chain_sql(SC_MODULARITY_ROUNDS, gnum, gden)
-    names = ["l0"] + [f"l{i}b" for i in range(1, SC_MODULARITY_ROUNDS + 1)]
-    qctes = ",".join(
-        _modularity_qnum_sql(nm, r, gnum, gden) for r, nm in enumerate(names)
-    )
-    qunion = " UNION ALL ".join(f"SELECT * FROM q{r}" for r in range(len(names)))
-    pick = " UNION ALL ".join(
-        f"SELECT id, lbl FROM {nm} WHERE {r} = (SELECT r FROM best)"
-        for r, nm in enumerate(names)
+    level, pick = _modularity_level_sql(
+        _LEVEL1, lambda li: _same_label_sql(_LEVEL1, li, 14), gnum, gden
     )
     if knn_cte is None:
         knn_cte = _SC_NEIGHBORS_ORACLE
@@ -2344,13 +2427,18 @@ deg AS MATERIALIZED (
   SELECT src AS id, CAST(COUNT(*) AS BIGINT) AS k FROM edges GROUP BY src
 ),
 mm AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
-l0 AS MATERIALIZED (SELECT id, id AS lbl FROM deg),
-{chain},
-{qctes},
-best AS MATERIALIZED (
-  SELECT r FROM ({qunion}) ORDER BY qn DESC, r ASC LIMIT 1
-),
+{level},
 lv1 AS MATERIALIZED (SELECT id, lbl FROM ({pick}) z)"""
+
+
+def _sym_edges(knn: DataFrame) -> DataFrame:
+    """A ``(vec_id, nbr)`` kNN edge list as the checkpointed symmetric,
+    distinct ``(src, dst)`` graph the community kernels run on."""
+    return materialize(
+        knn.select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
+        .union(knn.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
+        .distinct()
+    )
 
 
 def _sc_modularity_oracle() -> str:
@@ -2385,12 +2473,7 @@ def sc_communities_modularity(
     would run; at 100 TB the same code runs over an IVF-candidate kNN
     graph via the ``sc_neighbor_edges(cells=...)`` plug point.
     """
-    knn = sc_neighbor_edges(spark, sf_dir).select("vec_id", "nbr")
-    sym = materialize(
-        knn.select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
-        .union(knn.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(sc_neighbor_edges(spark, sf_dir))
     labels = louvain_phase1_labels(sym, SC_MODULARITY_ROUNDS, stats=stats)
     return labels.select(
         F.col("id").alias("vec_id"), big(F.col("lbl")).alias("community")
@@ -2531,12 +2614,7 @@ def sc_communities_leiden(
     point is ``sc_communities_louvain2``'s machinery (refined labels
     slot in as its level-1 input unchanged).
     """
-    knn = sc_neighbor_edges(spark, sf_dir).select("vec_id", "nbr")
-    sym = materialize(
-        knn.select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
-        .union(knn.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(sc_neighbor_edges(spark, sf_dir))
     lv1 = louvain_phase1_labels(sym, SC_MODULARITY_ROUNDS, stats=stats, gamma=gamma)
     refined = leiden_refine(sym, lv1)
     return refined.select(
@@ -2544,270 +2622,48 @@ def sc_communities_leiden(
     )
 
 
-# --- Louvain level 2: coarsened weighted phase-1 -------------------------------
+# --- Louvain level 2: coarsen, then the weighted phase-1 -----------------------
 
 
-def louvain_phase1_weighted(
-    edges: DataFrame,
-    selfmass: DataFrame,
-    max_rounds: int = SC_MODULARITY_ROUNDS,
-    stats: dict | None = None,
-) -> DataFrame:
-    """The WEIGHTED phased modularity step ``louvain_phase1_labels`` is
-    the w=1 case of — the engine for Louvain's level-2+ passes over a
-    coarsened supergraph: ``edges`` carries (src, dst, w) with integer
-    multi-edge weights and NO self-edges; ``selfmass`` carries (id, sm),
-    each supernode's internal directed edge mass (2× its internal
-    undirected edges — the level-1 community's collapsed interior).
-    Degrees are k(u) = Σ_out w + sm(u), so the total mass M = Σ k is
-    EXACTLY the original graph's directed edge count — the invariant
-    that makes level-2 modularity directly comparable to level-1's.
+def louvain_coarsen(
+    edges: DataFrame, labels: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Blondel et al.'s COARSENING step: collapse every ``labels``
+    community of the symmetric ``(src, dst)`` graph ``edges`` into one
+    supernode.  Returns the supergraph ``(src, dst, w)`` — inter-
+    community directed edge counts, no self-edges — and each supernode's
+    self-mass ``(id, sm)`` — its internal directed edge count: the
+    ``edges``/``selfmass`` input of the next ``louvain_phase1_labels``
+    level.
 
-    Same contract as the unweighted function: integer scores
-    M·W_{u,c} − k_u·(Σtot(c) − [own]·k_u) with W_{u,c} the edge weight
-    from u into c (self-mass excluded — it moves with u and cancels
-    across candidates), id-parity phases, minimum-labeling damping,
-    best-Q-state selection (Q numerator M·e_in − Σtot², where e_in
-    counts same-label edge weight plus ALL self-mass), driver fixpoint
-    early-exit, ``stats`` sink.  Scale shape: identical per-round cost
-    class, but over the COARSENED graph — O(communities) rows, so
-    every level after the first is nearly free at any corpus size (the
-    published Louvain observation that level 1 dominates runtime).
+    Both come back ``sever``'d, not materialized: a level-2 loop seeded
+    by level-1's 12-checkpoint output inherits its compounded carried
+    stats and the optimizer goes geometric (see session.sever — measured
+    2.2→39.5 s per phase, then a BigInt OOM).  The supergraph is small
+    BY CONSTRUCTION (O(communities) ≪ O(cells)), so the driver Arrow
+    roundtrip is the textbook Louvain centralize-the-coarse-graph step.
     """
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .union(selfmass.select("id"))
-        .distinct()
+    la = labels.select(F.col("id").alias("src"), F.col("lbl").alias("ca"))
+    lb = labels.select(F.col("id").alias("dst"), F.col("lbl").alias("cb"))
+    joined = edges.join(la, "src").join(lb, "dst")
+    sw = sever(
+        joined.where(F.col("ca") != F.col("cb"))
+        .groupBy(F.col("ca").alias("src"), F.col("cb").alias("dst"))
+        .agg(F.count(F.lit(1)).alias("w"))
     )
-    deg = materialize(
-        nodes.join(
-            edges.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("wd")),
-            "id",
-            "left",
-        )
-        .join(selfmass.withColumnRenamed("sm", "smv"), "id", "left")
-        .select(
-            "id",
-            (
-                F.coalesce(F.col("wd"), F.lit(0)) + F.coalesce(F.col("smv"), F.lit(0))
-            ).cast("long").alias("k"),
-        )
+    smass = sever(
+        joined.where(F.col("ca") == F.col("cb"))
+        .groupBy(F.col("ca").alias("id"))
+        .agg(F.count(F.lit(1)).alias("sm"))
     )
-    m_val = int(deg.agg(F.sum("k")).collect()[0][0])
-    sm_total = int(
-        selfmass.agg(F.coalesce(F.sum("sm"), F.lit(0))).collect()[0][0]
-    )
-    # Same r15 restructure as the unweighted ``louvain_phase1_labels`` (see
-    # there for the argument): k + exact ``moved`` flag ride in the state,
-    # candidate counting is ONE aggregation (neighbor rows carry w, the
-    # "stay" row carries 0 — sum == the old count-then-max), the argmax is
-    # a partial-aggregatable max(struct) instead of a sort+window, M is an
-    # inlined literal instead of a per-phase broadcast that re-aggregated
-    # the degree table, and the per-round Q probes are deferred to one
-    # round-tagged batch job after the loop.
-    state = deg.select(
-        "id", F.col("id").alias("lbl"), "k", F.lit(False).alias("moved")
-    )
-
-    def _phase(st: DataFrame, phase: int, obs: Observation | None = None) -> DataFrame:
-        nbr = (
-            edges.join(st.select(F.col("id").alias("dst"), "lbl"), "dst")
-            .where(F.col("src") % 2 == phase)
-            .select(
-                "src", F.col("lbl").alias("clbl"), F.col("w").cast("long").alias("cnt")
-            )
-        )
-        own = st.where(F.col("id") % 2 == phase).select(
-            F.col("id").alias("src"),
-            F.col("lbl").alias("clbl"),
-            F.lit(0).cast("long").alias("cnt"),
-        )
-        cand = nbr.unionAll(own).groupBy("src", "clbl").agg(
-            F.sum("cnt").cast("long").alias("kuc")
-        )
-        tot = (
-            st.groupBy("lbl")
-            .agg(F.sum("k").alias("tot"), F.count(F.lit(1)).alias("csz"))
-            .select(F.col("lbl").alias("clbl"), "tot", "csz")
-        )
-        own_sz = tot.select(F.col("clbl").alias("plbl"), F.col("csz").alias("ocsz"))
-        me = st.select(
-            F.col("id").alias("src"), F.col("lbl").alias("plbl"), "k",
-            F.col("moved").alias("mvd"),
-        )
-        scored = (
-            cand.join(me, "src")
-            .join(tot, "clbl")
-            .join(own_sz, "plbl")
-            .where(
-                (F.col("clbl") == F.col("plbl"))
-                | ~(
-                    (F.col("ocsz") == 1)
-                    & (F.col("csz") == 1)
-                    & (F.col("clbl") > F.col("plbl"))
-                )
-            )
-            .select(
-                "src",
-                "clbl",
-                "k",
-                "plbl",
-                "mvd",
-                (
-                    F.lit(m_val).cast("long") * F.col("kuc")
-                    - F.col("k")
-                    * (
-                        F.col("tot")
-                        - F.when(
-                            F.col("plbl") == F.col("clbl"), F.col("k")
-                        ).otherwise(0)
-                    )
-                ).alias("score"),
-            )
-        )
-        win = scored.groupBy("src", "k", "plbl", "mvd").agg(
-            F.max(
-                F.struct(
-                    F.col("score"),
-                    (-F.col("clbl")).alias("negc"),
-                    F.col("clbl").alias("wlbl"),
-                )
-            ).alias("w")
-        )
-        moved = win.select(
-            F.col("src").alias("id"),
-            F.col("w.wlbl").alias("lbl"),
-            "k",
-            (F.col("mvd") | (F.col("w.wlbl") != F.col("plbl"))).alias("moved"),
-        )
-        kept = st.where(F.col("id") % 2 != phase).select("id", "lbl", "k", "moved")
-        out = moved.unionAll(kept)
-        if obs is not None:
-            # Σmoved as an ``observe`` metric on the phase-1 checkpoint —
-            # see ``louvain_phase1_labels`` (r16 opt round, guide §5).
-            out = out.observe(obs, F.sum(F.col("moved").cast("long")).alias("mv"))
-        return materialize(out)
-
-    hist = [state]
-    rounds_used, converged = 0, False
-    for _ in range(max_rounds):
-        fresh = hist[-1].select("id", "lbl", "k", F.lit(False).alias("moved"))
-        obs = Observation(f"louvain_w_probe_{rounds_used}")
-        updated = _phase(_phase(fresh, 0), 1, obs)
-        rounds_used += 1
-        changed = int(obs.get["mv"] or 0)
-        if changed == 0:
-            converged = True
-            break
-        hist.append(updated)
-    lab_all = functools.reduce(
-        DataFrame.unionByName,
-        [
-            st.select(F.lit(i).alias("r"), "id", "lbl", "k")
-            for i, st in enumerate(hist)
-        ],
-    )
-    la = lab_all.select("r", F.col("id").alias("src"), F.col("lbl").alias("la"))
-    lb = lab_all.select("r", F.col("id").alias("dst"), F.col("lbl").alias("lb"))
-    e_in_df = (
-        edges.join(la, "src")
-        .join(lb, ["dst", "r"])
-        .where(F.col("la") == F.col("lb"))
-        .groupBy("r")
-        .agg(F.sum("w").cast("long").alias("e_in"))
-    )
-    sumsq_df = (
-        lab_all.groupBy("r", "lbl")
-        .agg(F.sum("k").alias("tot"))
-        .groupBy("r")
-        .agg(F.sum(F.col("tot") * F.col("tot")).alias("sumsq"))
-    )
-    qnums = [0] * len(hist)
-    for row in sumsq_df.join(e_in_df, "r", "left").collect():
-        e_in = int(row["e_in"]) if row["e_in"] is not None else 0
-        qnums[row["r"]] = m_val * (e_in + sm_total) - int(row["sumsq"])
-    best_r = max(range(len(qnums)), key=lambda i: (qnums[i], -i))
-    if stats is not None:
-        stats["rounds"] = rounds_used
-        stats["converged"] = converged
-        stats["best_round"] = best_r
-        stats["best_qnum"] = max(qnums)
-    return hist[best_r].select("id", "lbl")
-
-
-def _modularity_round_w_sql(prev: str, name: str, phase: int) -> str:
-    """Weighted phase CTE over ``sw`` (src, dst, w — coarsened
-    supergraph, no self-edges), ``deg2``, ``mm2`` — the level-2 twin of
-    ``_modularity_round_sql`` (kuc becomes the summed edge weight)."""
-    return f"""
-{name} AS MATERIALIZED (
-  SELECT id, lbl FROM (
-    SELECT s.src AS id, s.clbl AS lbl,
-           row_number() OVER (PARTITION BY s.src
-                              ORDER BY s.score DESC, s.clbl ASC) AS rn
-    FROM (
-      SELECT c.src, c.clbl,
-             mm2.m * c.kuc
-               - du.k * (t.tot - CASE WHEN p.lbl = c.clbl
-                                      THEN du.k ELSE 0 END) AS score
-      FROM (
-        SELECT src, clbl, MAX(kuc) AS kuc FROM (
-          SELECT e.src, pl.lbl AS clbl, CAST(SUM(e.w) AS BIGINT) AS kuc
-          FROM sw e JOIN {prev} pl ON pl.id = e.dst
-          GROUP BY e.src, pl.lbl
-          UNION ALL
-          SELECT id AS src, lbl AS clbl, CAST(0 AS BIGINT) AS kuc FROM {prev}
-        ) GROUP BY src, clbl
-      ) c
-      JOIN deg2 du ON du.id = c.src
-      JOIN (SELECT p2.lbl AS clbl, CAST(SUM(d2.k) AS BIGINT) AS tot,
-                   CAST(COUNT(*) AS BIGINT) AS csz
-            FROM {prev} p2 JOIN deg2 d2 ON d2.id = p2.id
-            GROUP BY p2.lbl) t ON t.clbl = c.clbl
-      JOIN (SELECT p3.id, p3.lbl,
-                   COUNT(*) OVER (PARTITION BY p3.lbl) AS ocsz
-            FROM {prev} p3) p ON p.id = c.src
-      CROSS JOIN mm2
-      WHERE c.src % 2 = {phase}
-        AND (c.clbl = p.lbl
-             OR NOT (p.ocsz = 1 AND t.csz = 1 AND c.clbl > p.lbl))
-    ) s
-  ) WHERE rn = 1
-  UNION ALL
-  SELECT id, lbl FROM {prev} WHERE id % 2 <> {phase}
-)"""
-
-
-def _modularity_qnum_w_sql(li: str, r: int) -> str:
-    return f"""
-p{r} AS MATERIALIZED (
-  SELECT {r} AS r,
-         (SELECT m FROM mm2)
-           * (COALESCE((SELECT CAST(SUM(e.w) AS BIGINT) FROM sw e
-                        JOIN {li} x ON x.id = e.src
-                        JOIN {li} y ON y.id = e.dst AND y.lbl = x.lbl), 0)
-              + (SELECT t FROM smt))
-         - (SELECT CAST(SUM(tot * tot) AS BIGINT) FROM (
-              SELECT CAST(SUM(d.k) AS BIGINT) AS tot
-              FROM {li} p JOIN deg2 d ON d.id = p.id GROUP BY p.lbl) tt)
-         AS qn
-)"""
+    return sw, smass
 
 
 def _sc_louvain2_oracle() -> str:
-    rounds, prev = [], "w0"
-    for i in range(1, SC_MODULARITY_ROUNDS + 1):
-        rounds.append(_modularity_round_w_sql(prev, f"w{i}a", 0))
-        rounds.append(_modularity_round_w_sql(f"w{i}a", f"w{i}b", 1))
-        prev = f"w{i}b"
-    chain2 = ",".join(rounds)
-    names = ["w0"] + [f"w{i}b" for i in range(1, SC_MODULARITY_ROUNDS + 1)]
-    qctes = ",".join(_modularity_qnum_w_sql(nm, r) for r, nm in enumerate(names))
-    qunion = " UNION ALL ".join(f"SELECT * FROM p{r}" for r in range(len(names)))
-    pick = " UNION ALL ".join(
-        f"SELECT id, lbl FROM {nm} WHERE {r} = (SELECT r FROM best2)"
-        for r, nm in enumerate(names)
+    level, pick = _modularity_level_sql(
+        _LEVEL2,
+        lambda li: f"""(COALESCE({_same_label_sql(_LEVEL2, li, 24)}, 0)
+              + (SELECT t FROM smt))""",
     )
     return f"""{_sc_modularity_prefix()},
 sw AS MATERIALIZED (
@@ -2830,12 +2686,7 @@ mm2 AS MATERIALIZED (SELECT CAST(SUM(k) AS BIGINT) AS m FROM deg2),
 smt AS MATERIALIZED (
   SELECT CAST(COALESCE(SUM(sm), 0) AS BIGINT) AS t FROM smass
 ),
-w0 AS MATERIALIZED (SELECT id, id AS lbl FROM deg2),
-{chain2},
-{qctes},
-best2 AS MATERIALIZED (
-  SELECT r FROM ({qunion}) ORDER BY qn DESC, r ASC LIMIT 1
-)
+{level}
 SELECT l.id AS vec_id, CAST(p.lbl AS BIGINT) AS community
 FROM lv1 l JOIN ({pick}) p ON p.id = l.lbl
 """
@@ -2851,10 +2702,11 @@ def sc_communities_louvain2(
 ) -> DataFrame:
     """TWO-LEVEL Louvain over the kNN cell graph — phase 1
     (``sc_communities_modularity``'s deterministic phased greedy), then
-    the Blondel et al. COARSENING step: level-1 communities collapse to
-    supernodes (inter-community edge counts as weights, intra-community
-    directed edge mass as self-mass), and the WEIGHTED phase-1 re-runs
-    on the supergraph (``louvain_phase1_weighted``).  This is the step
+    the Blondel et al. COARSENING step (``louvain_coarsen``): level-1
+    communities collapse to supernodes (inter-community edge counts as
+    weights, intra-community directed edge mass as self-mass), and the
+    same ``louvain_phase1_labels`` kernel re-runs on the supergraph with
+    its ``w`` column and ``selfmass``.  This is the step
     that escapes single-level greedy's plateau: measured on the sf0.001
     kNN graph, Q rises 0.233 → 0.372 (183 → 57 communities), matching
     the LPA partition's modularity with the actual modularity objective
@@ -2875,35 +2727,12 @@ def sc_communities_louvain2(
     unchanged.
     """
     l1_stats: dict = {}
-    knn = sc_neighbor_edges(spark, sf_dir).select("vec_id", "nbr")
-    sym = materialize(
-        knn.select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
-        .union(knn.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(sc_neighbor_edges(spark, sf_dir))
     lv1 = materialize(louvain_phase1_labels(sym, SC_MODULARITY_ROUNDS, stats=l1_stats))
-    la = lv1.select(F.col("id").alias("src"), F.col("lbl").alias("ca"))
-    lb = lv1.select(F.col("id").alias("dst"), F.col("lbl").alias("cb"))
-    joined = sym.join(la, "src").join(lb, "dst")
-    # sever, not materialize: the level-2 loop seeded by level-1's
-    # 12-checkpoint output inherits its compounded carried stats and the
-    # optimizer goes geometric (see session.sever — measured 2.2→39.5 s
-    # per phase, then a BigInt OOM).  The supergraph is small BY
-    # CONSTRUCTION (O(communities) ≪ O(cells)), so the driver Arrow
-    # roundtrip is the textbook Louvain centralize-the-coarse-graph step.
-    sw = sever(
-        joined.where(F.col("ca") != F.col("cb"))
-        .groupBy(F.col("ca").alias("src"), F.col("cb").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    smass = sever(
-        joined.where(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("id"))
-        .agg(F.count(F.lit(1)).alias("sm"))
-    )
+    sw, smass = louvain_coarsen(sym, lv1)
     l2_stats: dict = {}
-    lv2 = louvain_phase1_weighted(
-        sw, smass, SC_MODULARITY_ROUNDS, stats=l2_stats
+    lv2 = louvain_phase1_labels(
+        sw, SC_MODULARITY_ROUNDS, stats=l2_stats, selfmass=smass
     )
     if stats is not None:
         stats["level1"] = l1_stats
@@ -3427,11 +3256,7 @@ def _notebook_tail(spark: SparkSession, knn: DataFrame) -> DataFrame:
     ``(vec_id, nbr)`` kNN edge list: γ=5/4 phased Louvain + Leiden
     refinement on the symmetrized graph, spectral layout on the mutual
     graph, one row per laid-out cell."""
-    sym = materialize(
-        knn.select(F.col("vec_id").alias("src"), F.col("nbr").alias("dst"))
-        .union(knn.select(F.col("nbr").alias("src"), F.col("vec_id").alias("dst")))
-        .distinct()
-    )
+    sym = _sym_edges(knn)
     lv1 = louvain_phase1_labels(sym, SC_MODULARITY_ROUNDS, gamma=SC_LEIDEN_GAMMA)
     refined = leiden_refine(sym, lv1)
 

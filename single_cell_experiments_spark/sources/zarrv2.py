@@ -221,6 +221,8 @@ def write_zarr_group(
         F.max(F.size("embedding")).alias("dim"),
         *[F.max(F.octet_length(c)).alias(f"w_{c}") for c in str_cols],
     )
+    if n_rows == 0:
+        raise ValueError("write_zarr_group got no rows: needs dense ids 0..n-1 with n >= 1")
     dim = int(bounds["dim"])
     cpc = cols_per_chunk or dim
     members = [Member(os.path.join(path, "vec_id"), "vec_id", np.dtype("<i8"))]

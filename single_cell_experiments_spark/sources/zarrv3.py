@@ -681,6 +681,8 @@ def write_zarr_v3_group(
     os.makedirs(path, exist_ok=True)
 
     n_rows, bounds = dense_rows(wide, "vec_id", F.max(F.size("embedding")).alias("dim"))
+    if n_rows == 0:
+        raise ValueError("write_zarr_v3_group got no rows: needs dense ids 0..n-1 with n >= 1")
     dim = int(bounds["dim"])
     cpc = cols_per_chunk or dim
     bo = _byteorder(codecs)

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
+from collections.abc import Callable
 
 import duckdb
 import pytest
@@ -22,6 +24,18 @@ def spark():
     s = get_spark(app_name="sce-tests", cpus=int(os.environ.get("SCE_TEST_CPUS", "8")))
     yield s
     s.stop()
+
+
+def count_jobs(spark, run: Callable[[], object]) -> int:
+    """Spark jobs ``run()`` starts, counted in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setJobGroup("", "")
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

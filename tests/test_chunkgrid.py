@@ -25,7 +25,7 @@ from single_cell_experiments_spark.api import AnnFrame
 from single_cell_experiments_spark.catalog import load_table
 from single_cell_experiments_spark.sources import sparse, zarrv2, zarrv3
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, count_jobs
 
 N, DIM, RPC, CPC = 10, 5, 4, 2
 _GZIP_V2 = {"id": "gzip", "level": 1}
@@ -187,12 +187,18 @@ def test_gzip_chunks_are_reproducible(spark, tmp_path):
 # --- the dense-id guard ----------------------------------------------------------
 
 #: four rows whose ids are not 0..3: a duplicate cancelling a gap (passes
-#: a count == max+1 check), an id below 0, an id past the last row.
+#: a count == max+1 check), an id below 0, an id past the last row; and
+#: no rows at all.
 _BAD_IDS = {
     "dup_gap": [0, 1, 3, 3],
     "negative": [0, 1, -1, 2],
     "past_end": [0, 1, 2, 9],
+    "empty": [],
 }
+#: writers for which no rows is a valid input: appending nothing, the
+#: CSR vectors of a matrix with no non-zeros, a dictionary vector of
+#: length 0.
+_EMPTY_OK = {"v2_append", "v2_sparse", "v3_dict"}
 
 
 def _rows(spark, ids, lo=0):
@@ -236,7 +242,8 @@ def _metadata_docs(root: str) -> list[str]:
 
 @pytest.mark.parametrize(
     "writer,case",
-    [(w, c) for w in _WRITERS for c in _BAD_IDS] + [("varm_1based", "pos")],
+    [(w, c) for w in _WRITERS for c in _BAD_IDS if not (c == "empty" and w in _EMPTY_OK)]
+    + [("varm_1based", "pos")],
 )
 def test_positional_writers_reject_non_dense_ids(spark, tmp_path, writer, case):
     """Every positional writer refuses ids that are not exactly
@@ -280,16 +287,10 @@ WRITE_MAX_JOBS = {"v2_group": 5, "v3_sharded": 5}
 
 @pytest.mark.parametrize("writer", sorted(WRITE_MAX_JOBS))
 def test_writer_job_count_bound(spark, tmp_path, writer):
-    e = load_table(spark, SF_DIR, "embeddings")
-    sc = spark.sparkContext
-    group = f"test-write-jobs-{writer}"
-    sc.setJobGroup(group, writer)
-    try:
-        if writer == "v2_group":
-            zarrv2.write_zarr_group(e, str(tmp_path / "s"))
-        else:
-            zarrv3.write_zarr_v3_group(e, str(tmp_path / "s"), shard_inner_rows=16)
-    finally:
-        sc.setJobGroup("", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    e, path = load_table(spark, SF_DIR, "embeddings"), str(tmp_path / "s")
+    write = {
+        "v2_group": lambda: zarrv2.write_zarr_group(e, path),
+        "v3_sharded": lambda: zarrv3.write_zarr_v3_group(e, path, shard_inner_rows=16),
+    }[writer]
+    jobs = count_jobs(spark, write)
     assert 0 < jobs <= WRITE_MAX_JOBS[writer], jobs

@@ -14,6 +14,7 @@ from single_cell_experiments_spark.operators.singlecell import (
     lpa_labels,
     sc_communities,
 )
+from tests.conftest import count_jobs
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -333,13 +334,9 @@ def test_dedup_connected_components_job_count_bound(spark):
     from single_cell_experiments_spark.registry import fresh_fn
 
     sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
-    sc = spark.sparkContext
-    group = "test-cc-jobs"
-    sc.setJobGroup(group, "dedup_connected_components")
-    try:
-        df = fresh_fn("dedup_connected_components")(spark, sf)
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setJobGroup("", "")
-    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = count_jobs(
+        spark,
+        lambda: fresh_fn("dedup_connected_components")(spark, sf)
+        .write.format("noop").mode("overwrite").save(),
+    )
     assert 0 < jobs <= CC_SF001_MAX_JOBS, jobs

@@ -223,12 +223,12 @@ def louvain2_stress(spark, src_dir: str, out_dir: str, k: int) -> dict:
     from single_cell_experiments_spark.operators.singlecell import (
         SC_IVF_FINE_BITS,
         SC_MODULARITY_ROUNDS,
+        louvain_coarsen,
         louvain_phase1_labels,
-        louvain_phase1_weighted,
         sc_ivf_cells_fine,
         sc_neighbor_edges,
     )
-    from single_cell_experiments_spark.session import materialize, sever
+    from single_cell_experiments_spark.session import materialize
 
     dst = os.path.join(out_dir, "embeddings.parquet")
     if not os.path.exists(dst):
@@ -263,21 +263,11 @@ def louvain2_stress(spark, src_dir: str, out_dir: str, k: int) -> dict:
     t_l1 = time.perf_counter() - t0
 
     t0 = time.perf_counter()
-    la = lv1.select(F.col("id").alias("src"), F.col("lbl").alias("ca"))
-    lb = lv1.select(F.col("id").alias("dst"), F.col("lbl").alias("cb"))
-    joined = sym.join(la, "src").join(lb, "dst")
-    sw = sever(
-        joined.where(F.col("ca") != F.col("cb"))
-        .groupBy(F.col("ca").alias("src"), F.col("cb").alias("dst"))
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    smass = sever(
-        joined.where(F.col("ca") == F.col("cb"))
-        .groupBy(F.col("ca").alias("id"))
-        .agg(F.count(F.lit(1)).alias("sm"))
-    )
+    sw, smass = louvain_coarsen(sym, lv1)
     l2_stats: dict = {}
-    lv2 = louvain_phase1_weighted(sw, smass, SC_MODULARITY_ROUNDS, stats=l2_stats)
+    lv2 = louvain_phase1_labels(
+        sw, SC_MODULARITY_ROUNDS, stats=l2_stats, selfmass=smass
+    )
     n_l2 = lv2.select("lbl").distinct().count()
     t_l2 = time.perf_counter() - t0
 
