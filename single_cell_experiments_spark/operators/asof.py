@@ -77,6 +77,30 @@ ASOF LEFT JOIN
 """
 
 
+def _merge_asof_clicks(p: "pd.DataFrame", c: "pd.DataFrame") -> "pd.DataFrame":
+    """One user's purchases, each with its latest click at or before it
+    (``cogroup_merge_asof``'s kernel).  Module-level, so the Python worker
+    receives it by reference and imports the package."""
+    import pandas as pd
+
+    if p.empty:
+        return pd.DataFrame(
+            {"event_id": [], "user_id": [], "purchase_ts_us": [], "click_ts_us": []}
+        )
+    p = p.sort_values("purchase_ts_us", kind="mergesort")
+    out = pd.merge_asof(
+        p,
+        c.sort_values("click_ts_us", kind="mergesort").rename(
+            columns={"click_ts_us": "t"}
+        )[["t"]].assign(click_ts_us=lambda x: x["t"]),
+        left_on="purchase_ts_us",
+        right_on="t",
+        direction="backward",  # latest click with click_ts <= purchase_ts
+    ).drop(columns=["t"])
+    out["click_ts_us"] = out["click_ts_us"].astype("Int64")
+    return out[["event_id", "user_id", "purchase_ts_us", "click_ts_us"]]
+
+
 @query("cogroup_merge_asof", oracle=_COGROUP_ORACLE, tags=("relational", "join", "asof", "udf"))
 def cogroup_merge_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The same nearest-earlier semantics as ``join_asof_purchase_signup``
@@ -93,8 +117,6 @@ def cogroup_merge_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     allow (it stays in codegen); this is the API-parity path, oracle-checked
     against the same DuckDB ASOF JOIN.
     """
-    import pandas as pd
-
     e = load_table(spark, sf_dir, "events")
     purchases = e.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", F.col("ts_us").alias("purchase_ts_us")
@@ -103,29 +125,11 @@ def cogroup_merge_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.col("ts_us").alias("click_ts_us")
     )
 
-    def _merge(p: "pd.DataFrame", c: "pd.DataFrame") -> "pd.DataFrame":
-        if p.empty:
-            return pd.DataFrame(
-                {"event_id": [], "user_id": [], "purchase_ts_us": [], "click_ts_us": []}
-            )
-        p = p.sort_values("purchase_ts_us", kind="mergesort")
-        out = pd.merge_asof(
-            p,
-            c.sort_values("click_ts_us", kind="mergesort").rename(
-                columns={"click_ts_us": "t"}
-            )[["t"]].assign(click_ts_us=lambda x: x["t"]),
-            left_on="purchase_ts_us",
-            right_on="t",
-            direction="backward",  # latest click with click_ts <= purchase_ts
-        ).drop(columns=["t"])
-        out["click_ts_us"] = out["click_ts_us"].astype("Int64")
-        return out[["event_id", "user_id", "purchase_ts_us", "click_ts_us"]]
-
     return (
         purchases.groupBy("user_id")
         .cogroup(clicks.groupBy("user_id"))
         .applyInPandas(
-            _merge,
+            _merge_asof_clicks,
             schema="event_id bigint, user_id bigint, purchase_ts_us bigint, click_ts_us bigint",
         )
     )

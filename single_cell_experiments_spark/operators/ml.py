@@ -255,6 +255,16 @@ def _banded_minhash_neighbors(docs: DataFrame) -> DataFrame:
     )
 
 
+def _centered(rows, mu):
+    """``rows`` (one vector or a list of them) as float64, minus ``mu``.
+
+    Module-level, so the Python workers of ``svd_project`` and
+    ``gram_project`` receive it by reference and import the package."""
+    import numpy as np
+
+    return np.asarray(rows, dtype=np.float64) - mu
+
+
 def svd_project(e: DataFrame, k: int):
     """Wide-matrix PCA route (A10 scale note): center, ``RowMatrix.
     computeSVD(k, computeU=False)``, then project rows against the
@@ -308,7 +318,7 @@ def svd_project(e: DataFrame, k: int):
     rows = (
         arr.select("v")
         .rdd.map(
-            lambda r: OldVectors.dense(np.asarray(r[0], dtype=np.float64) - mu_b.value)
+            lambda r: OldVectors.dense(_centered(r[0], mu_b.value))
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -321,8 +331,7 @@ def svd_project(e: DataFrame, k: int):
 
     @pandas_udf("array<double>")
     def _proj(col: pd.Series) -> pd.Series:
-        x = np.array(col.to_list(), dtype=np.float64) - mu_b.value
-        return pd.Series(list(x @ v_b.value))
+        return pd.Series(list(_centered(col.to_list(), mu_b.value) @ v_b.value))
 
     scores = arr.select("vec_id", _proj("v").alias("scores"))
     return scores, np.asarray(svd.s.toArray())
@@ -414,10 +423,7 @@ def gram_project(e: DataFrame, k: int, max_d: int = GRAM_MAX_D):
 
     @pandas_udf("array<double>")
     def _proj(col: pd.Series) -> pd.Series:
-        import numpy as _np
-
-        x = _np.array(col.to_list(), dtype=_np.float64) - mu_b.value
-        return pd.Series(list(x @ v_b.value))
+        return pd.Series(list(_centered(col.to_list(), mu_b.value) @ v_b.value))
 
     scores = arr.select("vec_id", _proj("v").alias("scores"))
     return scores, np.maximum(evals[order], 0.0)

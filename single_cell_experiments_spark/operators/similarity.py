@@ -691,6 +691,31 @@ FROM embeddings
 """
 
 
+# The pandas UDF kernels are module-level so Python workers receive them by
+# reference and import the package.
+
+
+def _quantized_dot(emb: pd.Series) -> pd.Series:
+    """``Σ floor(x_i·1000)·w_i`` per embedding, ``w`` = ``_PW``."""
+    import numpy as np
+
+    m = np.stack(emb.to_numpy())
+    q = np.floor(m.astype(np.float64) * 1000.0).astype(np.int64)
+    return pd.Series(q @ np.array(_PW, dtype=np.int64))
+
+
+def _int_dot(q: pd.Series, w: pd.Series) -> int:
+    import numpy as np
+
+    return int(np.dot(q.to_numpy(np.int64), w.to_numpy(np.int64)))
+
+
+def _int_sum(w: pd.Series) -> int:
+    import numpy as np
+
+    return int(w.to_numpy(np.int64).sum())
+
+
 @query("pandas_scalar_quantized_dot", oracle=_PSCORE_ORACLE, tags=("similarity", "udf", "quantize"))
 def pandas_scalar_quantized_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar ``@pandas_udf`` surface (the one Arrow UDF flavor the rest of
@@ -706,18 +731,10 @@ def pandas_scalar_quantized_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape: embarrassingly row-local; the UDF pipelines inside the scan
     stage (no shuffle anywhere).
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    w = np.array(_PW, dtype=np.int64)
-
-    @pandas_udf("bigint")
-    def qscore(emb: pd.Series) -> pd.Series:
-        m = np.stack(emb.to_numpy())
-        q = np.floor(m.astype(np.float64) * 1000.0).astype(np.int64)
-        return pd.Series(q @ w)
-
     e = load_table(spark, sf_dir, "embeddings")
+    qscore = pandas_udf(_quantized_dot, "bigint")
     return e.select("vec_id", qscore(F.col("embedding")).alias("qscore"))
 
 
@@ -848,17 +865,9 @@ def grouped_agg_pandas_wsum(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg plan to share), so the companion weight total is a second
     pandas aggregate on the same exchange.
     """
-    import numpy as np
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf("bigint")
-    def qwsum(q: pd.Series, w: pd.Series) -> int:
-        return int(np.dot(q.to_numpy(np.int64), w.to_numpy(np.int64)))
-
-    @pandas_udf("bigint")
-    def wsum(w: pd.Series) -> int:
-        return int(w.to_numpy(np.int64).sum())
-
+    qwsum, wsum = pandas_udf(_int_dot, "bigint"), pandas_udf(_int_sum, "bigint")
     e = load_table(spark, sf_dir, "embeddings")
     # element_at is 1-based like DuckDB's list index (bare [1] is 0-based)
     q = F.expr("CAST(FLOOR(CAST(element_at(embedding, 1) AS DOUBLE) * 1000) AS BIGINT)")

@@ -511,6 +511,26 @@ FROM coo GROUP BY label, pos
 """
 
 
+def _centroid_e6(pdf):
+    """``grouped_pandas_centroid``'s kernel: one label's row count and
+    per-position sums in exact micro-units.  Module-level, so the Python
+    worker receives it by reference and imports the package."""
+    import numpy as np
+    import pandas as pd
+
+    label = int(pdf["label"].iloc[0])
+    m = np.array(pdf["embedding"].to_list(), dtype=np.float64)
+    e6 = np.round(np.round(m, 6) * 1_000_000).astype(np.int64)
+    return pd.DataFrame(
+        {
+            "label": label,
+            "pos": np.arange(1, m.shape[1] + 1, dtype=np.int64),
+            "n": np.int64(m.shape[0]),
+            "sum_e6": e6.sum(axis=0, dtype=np.int64),
+        }
+    )
+
+
 @query("grouped_pandas_centroid", oracle=_GROUPED_CENTROID_ORACLE, tags=("singlecell", "udf"))
 def grouped_pandas_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid accumulation as a grouped **numpy kernel**
@@ -522,27 +542,9 @@ def grouped_pandas_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on ``label``; each group streams through Arrow in
     batches and reduces to O(dim) rows.
     """
-    import numpy as np
-    import pandas as pd
-
     e = load_table(spark, sf_dir, "embeddings")
-
     schema = "label int, pos bigint, n bigint, sum_e6 bigint"
-
-    def _centroid(pdf: pd.DataFrame) -> pd.DataFrame:
-        label = int(pdf["label"].iloc[0])
-        m = np.array(pdf["embedding"].to_list(), dtype=np.float64)
-        e6 = np.round(np.round(m, 6) * 1_000_000).astype(np.int64)
-        return pd.DataFrame(
-            {
-                "label": label,
-                "pos": np.arange(1, m.shape[1] + 1, dtype=np.int64),
-                "n": np.int64(m.shape[0]),
-                "sum_e6": e6.sum(axis=0, dtype=np.int64),
-            }
-        )
-
-    return e.select("label", "embedding").groupBy("label").applyInPandas(_centroid, schema)
+    return e.select("label", "embedding").groupBy("label").applyInPandas(_centroid_e6, schema)
 
 
 # --- regress_out (per-gene OLS on a per-cell covariate) -----------------------

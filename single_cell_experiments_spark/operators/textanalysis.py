@@ -902,6 +902,19 @@ WHERE length(token) > 0
 """
 
 
+class _SplitTokens:
+    """``doc_tokens_udtf``'s UDTF: (1-based index, token, length) of each
+    non-empty space-separated token.  Module-level, so the Python worker
+    receives it by reference and imports the package."""
+
+    def eval(self, text: str):
+        if text is None:
+            return
+        for i, part in enumerate(text.split(" ")):
+            if part:
+                yield i + 1, part, len(part)
+
+
 @query("doc_tokens_udtf", oracle=_TOKENS_UDTF_ORACLE, tags=("text", "udtf", "udf"))
 def doc_tokens_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-stream segmentation through a Python **UDTF** (Spark 4's
@@ -921,18 +934,12 @@ def doc_tokens_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.functions import udtf
 
-    @udtf(returnType="tok_idx: bigint, token: string, n_chars: bigint")
-    class _SplitTokens:
-        def eval(self, text: str):
-            if text is None:
-                return
-            for i, part in enumerate(text.split(" ")):
-                if part:
-                    yield i + 1, part, len(part)
-
     d = load_table(spark, sf_dir, "documents")
     d.createOrReplaceTempView("__docs_udtf")
-    spark.udtf.register("sce_split_tokens", _SplitTokens)
+    spark.udtf.register(
+        "sce_split_tokens",
+        udtf(_SplitTokens, returnType="tok_idx: bigint, token: string, n_chars: bigint"),
+    )
     return spark.sql(
         """
         SELECT d.doc_id, s.tok_idx, s.token, s.n_chars

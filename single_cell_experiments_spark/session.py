@@ -18,16 +18,68 @@ indices).  Here the session is configured so Catalyst/AQE do that work:
   TIMESTAMP(NANOS) which Spark's parquet reader rejects by default; we read
   the column as raw int64 nanoseconds and convert explicitly (see
   ``catalog.load_table``).
+- Python workers: importing this module makes PySpark's per-task
+  ``importlib.invalidate_caches()`` re-read a zip archive's directory only
+  when the archive changed (``_invalidate_zip_if_changed``; SCALE.md
+  "Python-worker task floor").  Every engine function run in a Python
+  worker is module-level or calls module-level engine code, so cloudpickle
+  sends that code by reference and the worker imports the package, and
+  with it this module.
 """
 
 from __future__ import annotations
 
 import os
 import weakref
+import zipimport
 
 from pyspark.sql import DataFrame, SparkSession
 
 ENGINE_NAME = "sce-spark"
+
+#: ``(st_mtime_ns, st_size)`` of each zip archive when its directory was last
+#: read through ``_invalidate_zip_if_changed``; process-wide, like
+#: ``zipimport``'s own directory cache.
+_zip_stamps: dict[str, tuple[int, int]] = {}
+
+_eager_zip_invalidate = getattr(
+    zipimport.zipimporter.invalidate_caches, "__wrapped__", zipimport.zipimporter.invalidate_caches
+)
+
+
+def _invalidate_zip_if_changed(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive's
+    directory only if its ``(st_mtime_ns, st_size)`` changed since the
+    last read.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    Python-worker task (``worker_util.setup_spark_files``).  Where
+    ``zipimporter.invalidate_caches`` re-parses the whole zip directory
+    eagerly (CPython <= 3.12), a reused worker's importers on
+    ``pyspark.zip``, the spark-core jar and py4j cost 0.2-0.35 s per task.
+    A rewritten or replaced archive is still re-read, and a missing one
+    still drops its cached directory.  The stamp is taken before the read,
+    so an archive changed during the read is read again on the next call.
+    """
+    try:
+        st = os.stat(self.archive)
+    except OSError:
+        _eager_zip_invalidate(self)  # gone: drops the cached directory
+        return
+    stamp = (st.st_mtime_ns, st.st_size)
+    files = zipimport._zip_directory_cache.get(self.archive)
+    if files is not None and _zip_stamps.get(self.archive) == stamp:
+        self._files = files
+        return
+    _eager_zip_invalidate(self)
+    _zip_stamps[self.archive] = stamp
+
+
+# Installed only where the method re-reads eagerly (it calls
+# ``_read_directory``): CPython 3.13 made it a plain cache drop (gh-103200).
+if "_read_directory" in getattr(getattr(_eager_zip_invalidate, "__code__", None), "co_names", ()):
+    _invalidate_zip_if_changed.__wrapped__ = _eager_zip_invalidate
+    zipimport.zipimporter.invalidate_caches = _invalidate_zip_if_changed
 
 #: Confs the engine's RESULTS depend on — re-asserted on every ``tune()``
 #: call, including foreign driver sessions: without these, events timestamps

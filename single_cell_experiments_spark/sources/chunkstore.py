@@ -50,6 +50,37 @@ from ..registry import query
 
 ROWS_PER_CHUNK = 64
 
+# The worker-side functions below are module-level: cloudpickle sends them
+# by reference, so a Python worker that runs them imports the package, and
+# with it ``session``'s zip-directory shim.
+
+
+def _save_chunk(path: str, chunk_id: int, pdf: pd.DataFrame) -> pd.DataFrame:
+    """Write one chunk's rows (vec_ids + float32 value block) as
+    ``chunk_<id>.npz`` under ``path``; returns its ``(chunk_id, n_rows)``."""
+    pdf = pdf.sort_values("vec_id")
+    vec_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+    values = np.array(pdf["embedding"].to_list(), dtype=np.float32)
+    buf = io.BytesIO()
+    np.savez(buf, vec_ids=vec_ids, values=values)
+    with open(os.path.join(path, f"chunk_{chunk_id:06d}.npz"), "wb") as f:
+        f.write(buf.getvalue())
+    return pd.DataFrame({"chunk_id": [chunk_id], "n_rows": [len(pdf)]})
+
+
+def _decode_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """``mapInPandas`` decode of binaryFile rows to (vec_id, embedding)."""
+    for pdf in batches:
+        for content in pdf["content"]:
+            arch = np.load(io.BytesIO(content), allow_pickle=False)
+            yield pd.DataFrame(
+                {
+                    "vec_id": arch["vec_ids"],
+                    # one ndarray per row -> Arrow list<double> batch
+                    "embedding": list(arch["values"].astype(np.float64)),
+                }
+            )
+
 
 def write_chunk_store(wide: DataFrame, path: str, rows_per_chunk: int = ROWS_PER_CHUNK) -> int:
     """Write (vec_id, embedding) rows as a chunked store at ``path``.
@@ -69,15 +100,7 @@ def write_chunk_store(wide: DataFrame, path: str, rows_per_chunk: int = ROWS_PER
     )
 
     def _write_chunk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        (chunk_id,) = key
-        pdf = pdf.sort_values("vec_id")
-        vec_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        values = np.array(pdf["embedding"].to_list(), dtype=np.float32)
-        buf = io.BytesIO()
-        np.savez(buf, vec_ids=vec_ids, values=values)
-        with open(os.path.join(path, f"chunk_{chunk_id:06d}.npz"), "wb") as f:
-            f.write(buf.getvalue())
-        return pd.DataFrame({"chunk_id": [chunk_id], "n_rows": [len(pdf)]})
+        return _save_chunk(path, key[0], pdf)
 
     chunks = (
         wide.select("vec_id", "embedding")
@@ -114,23 +137,10 @@ def read_chunk_store(spark: SparkSession, path: str) -> DataFrame:
     crosses the Python boundary as a native Arrow list<double> column —
     one zero-copy-ish columnar batch per chunk, no per-row serialization.
     """
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for content in pdf["content"]:
-                arch = np.load(io.BytesIO(content), allow_pickle=False)
-                vec_ids = arch["vec_ids"]
-                values = arch["values"].astype(np.float64)
-                yield pd.DataFrame(
-                    {
-                        "vec_id": vec_ids,
-                        # one ndarray per row -> Arrow list<double> batch
-                        "embedding": list(values),
-                    }
-                )
-
-    files = spark.read.format("binaryFile").load(os.path.join(path, "chunk_*.npz"))
-    return files.select("content").mapInPandas(_decode, schema=_READ_SCHEMA)
+    # The directory plus a name filter, not a glob path: a glob as the load
+    # path makes FileStreamSink warn, with a stack trace, on every read.
+    files = spark.read.format("binaryFile").option("pathGlobFilter", "chunk_*.npz").load(path)
+    return files.select("content").mapInPandas(_decode_chunks, schema=_READ_SCHEMA)
 
 
 _ROUNDTRIP_ORACLE = """

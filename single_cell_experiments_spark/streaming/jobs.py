@@ -109,6 +109,23 @@ def run_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _drain_to_memory(deduped, "dedup", "append")
 
 
+def _count_events(key, pdfs, state):
+    """``run_stateful_counter_stream``'s state update: one user's event count
+    and value sum so far.  Module-level, so the Python worker receives it by
+    reference and imports the package."""
+    import pandas as pd
+
+    n, v_e6 = state.get if state.exists else (0, 0)
+    for pdf in pdfs:
+        n += len(pdf)
+        # per-row integer micro-units: the running sum is exact & mergeable
+        v_e6 += int(
+            (pdf["value"].astype("float64").round(6) * 10**6).round().astype("int64").sum()
+        )
+    state.update((n, v_e6))
+    yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "v_sum_e6": [v_e6]})
+
+
 def run_stateful_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful operator via ``applyInPandasWithState``: a per-user
     lifetime event counter + running value sum, state carried across
@@ -118,7 +135,7 @@ def run_stateful_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     With availableNow replay the final counts equal the batch groupBy —
     asserted in tests/test_streaming.py.
     """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupStateTimeout
     from pyspark.sql.types import LongType, StructField, StructType
 
     out_schema = StructType(
@@ -132,25 +149,12 @@ def run_stateful_counter_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         [StructField("n", LongType()), StructField("v_e6", LongType())]
     )
 
-    def _update(key, pdfs, state: "GroupState"):
-        import pandas as pd
-
-        n, v_e6 = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n += len(pdf)
-            # per-row integer micro-units: the running sum is exact & mergeable
-            v_e6 += int(
-                (pdf["value"].astype("float64").round(6) * 10**6).round().astype("int64").sum()
-            )
-        state.update((n, v_e6))
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "v_sum_e6": [v_e6]})
-
     stream = _event_stream(spark, sf_dir)
     counted = (
         stream.withWatermark("t", "10 minutes")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _update,
+            _count_events,
             outputStructType=out_schema,
             stateStructType=state_schema,
             outputMode="update",

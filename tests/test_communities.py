@@ -281,8 +281,11 @@ def test_batch_mixing_accounting(spark):
 # --- dedup connected components: min-label propagation (cc_min_labels) -----
 
 #: jobs ``dedup_connected_components`` runs at sf0.01 in one job group on
-#: the test session, as measured (38).  Job counts are deterministic, so a
-#: job regression fails here the way a hash regression fails the oracle.
+#: the test session, as measured (38), so a job regression fails here the
+#: way a hash regression fails the oracle.  Job counts of AQE-joined plans
+#: are not exactly repeatable: AQE query-stage jobs varied by up to 2
+#: between runs of the community queries, and this plan has the LSH joins,
+#: so a run may land a job or two off the measured count.
 CC_SF001_MAX_JOBS = 38
 
 

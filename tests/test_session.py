@@ -9,6 +9,14 @@ perf confs apply only on a session's FIRST tune.
 
 from __future__ import annotations
 
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+
 from single_cell_experiments_spark.session import CORRECTNESS_CONFS, PERF_CONFS, tune
 
 
@@ -90,3 +98,75 @@ def test_materialize_local_and_reliable_checkpoint(spark, tmp_path):
         assert ckpt_files, "reliable checkpoint must write durable files"
     finally:
         spark.conf.set("spark.sce.reliableCheckpoint", "false")
+
+
+# --- zip-directory shim: importlib.invalidate_caches() on unchanged archives ---
+
+
+def _write_zip(archive, modules: dict) -> None:
+    with zipfile.ZipFile(archive, "w") as z:
+        for name, src in modules.items():
+            z.writestr(f"{name}.py", src)
+
+
+def test_invalidate_caches_rereads_a_zip_only_when_it_changed(tmp_path, monkeypatch):
+    """PySpark calls ``importlib.invalidate_caches()`` on every worker task;
+    an unchanged archive's directory is not parsed again, a rewritten one
+    is, and its new module imports; a deleted one drops its directory."""
+    archive = str(tmp_path / "mods.zip")
+    _write_zip(archive, {"sce_zipshim_a": "VALUE = 1\n"})
+    monkeypatch.syspath_prepend(archive)
+    for name in ("sce_zipshim_a", "sce_zipshim_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    assert importlib.import_module("sce_zipshim_a").VALUE == 1
+    importlib.invalidate_caches()  # first call after the import: stamps the archive
+
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(
+        zipimport, "_read_directory", lambda path: reads.append(path) or read_directory(path)
+    )
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert archive not in reads
+
+    _write_zip(archive, {"sce_zipshim_a": "VALUE = 1\n", "sce_zipshim_b": "VALUE = 2\n"})
+    importlib.invalidate_caches()
+    assert importlib.import_module("sce_zipshim_b").VALUE == 2
+    assert reads.count(archive) == 1
+
+    os.remove(archive)
+    importlib.invalidate_caches()
+    assert archive not in zipimport._zip_directory_cache
+    monkeypatch.delitem(sys.path_importer_cache, archive, raising=False)
+
+
+def test_engine_python_workers_run_the_zip_shim(spark, tmp_path):
+    """A worker that ran an engine ``mapInPandas`` read has the shim
+    installed: the read's function imports the package in the worker."""
+    from single_cell_experiments_spark.sources.chunkstore import (
+        read_chunk_store,
+        write_chunk_store,
+    )
+
+    pkg = "single_cell_experiments_spark"
+
+    store = str(tmp_path / "store")
+    rows = spark.createDataFrame(
+        [(i, [float(i)]) for i in range(16)], "vec_id long, embedding array<double>"
+    )
+    assert write_chunk_store(rows, store, rows_per_chunk=2) == 8
+    assert read_chunk_store(spark, store).count() == 16
+
+    def probe(batches):
+        import zipimport
+
+        engine = pkg in sys.modules
+        shim = zipimport.zipimporter.invalidate_caches.__module__ == f"{pkg}.session"
+        for pdf in batches:
+            yield pd.DataFrame({"engine": [engine] * len(pdf), "shim": shim})
+
+    probed = spark.range(16, numPartitions=16).mapInPandas(probe, "engine boolean, shim boolean")
+    seen = probed.collect()
+    assert any(r.engine for r in seen), "no probe task ran in a worker that ran the engine read"
+    assert all(r.shim for r in seen if r.engine), seen
