@@ -96,11 +96,6 @@ def stat_sum(col: Column | str, alias: str) -> Column:
     return F.sum(stat6(col)).cast("double").alias(alias)
 
 
-def stat_avg(col: Column | str, alias: str) -> Column:
-    c = _c(col)
-    return (F.sum(stat6(c)).cast("double") / F.count(c)).alias(alias)
-
-
 def big(col: Column | str, alias: str | None = None) -> Column:
     """Normalize derived integers (size(), row_number(), ...) to BIGINT."""
     out = _c(col).cast("bigint")
@@ -110,11 +105,6 @@ def big(col: Column | str, alias: str | None = None) -> Column:
 def r6(col: Column | str, alias: str | None = None) -> Column:
     """Round per-row float math to 6 decimals (transcendental insurance)."""
     out = F.round(_c(col).cast("double"), 6)
-    return out.alias(alias) if alias else out
-
-
-def r4(col: Column | str, alias: str | None = None) -> Column:
-    out = F.round(_c(col).cast("double"), 4)
     return out.alias(alias) if alias else out
 
 
@@ -140,15 +130,3 @@ def dd_rev_sum(price: str, disc: str, alias: str) -> str:
         f"CAST(SUM(CAST(round({price} * 100) AS BIGINT)"
         f" * (100 - CAST(round({disc} * 100) AS BIGINT))) AS DOUBLE) / 10000.0 AS {alias}"
     )
-
-
-def dd_stat6(expr: str) -> str:
-    return f"CAST(round(CAST({expr} AS DOUBLE), 6) AS DECIMAL(18,6))"
-
-
-def dd_stat_sum(expr: str, alias: str) -> str:
-    return f"CAST(SUM({dd_stat6(expr)}) AS DOUBLE) AS {alias}"
-
-
-def dd_stat_avg(expr: str, alias: str) -> str:
-    return f"CAST(SUM({dd_stat6(expr)}) AS DOUBLE)/COUNT({expr}) AS {alias}"

@@ -1,6 +1,6 @@
-"""One chunk-grid writer for every padded Zarr store (SURVEY.md §2.A A2
-``zarr write`` + A13, the chunk-aligned repartition; ref
-``zarr_spark.py``'s one write helper).
+"""One chunk grid for every padded Zarr store, both halves (SURVEY.md
+§2.A A1 ``zarr read`` and A2 ``zarr write`` + A13, the chunk-aligned
+repartition; ref ``zarr_spark.py``'s one read and one write helper).
 
 Every positional writer — Zarr v2 (``zarrv2``), Zarr v3 plain and
 sharded (``zarrv3``) and the CSR/CSC member arrays (``sparse``) — is one
@@ -29,24 +29,51 @@ job succeeds (callers write group documents after that), so a rejected
 write leaves no readable array and a rejected append leaves the store
 at its old shape.
 
+Every dense read is planned from the array metadata alone — the chunk
+indices are a function of ``shape`` and ``chunks``, so nothing is
+listed and a stray file in the array directory is never opened:
+
+- :func:`row_chunks` is ``spark.range(n_row_chunks)`` with one partition
+  per core, at most one per chunk; the caller adds one ``mapInPandas``
+  (:func:`read_chunk_grid` for one array, ``zarrv2.read_zarr_rows`` for
+  the row-aligned members of a group);
+- :func:`emit_row_chunk` turns one row chunk into rows: ``(row, col0,
+  values)`` slices, one per column chunk, for 2-D arrays and ``(row,
+  value)`` for 1-D ones, edge padding trimmed by the shape;
+- a format supplies only the full-block fetch ``chunk(coords)``
+  (``zarrv2._read_chunk``, ``zarrv3._read_chunk_v3``), where a chunk
+  absent from the store reads as the array's ``fill_value`` through
+  :func:`fill_chunk` — the spec rule, and the write side's block start —
+  and an array declaring ``fill_value: null`` raises.
+
 Two chunk writers stay outside on purpose: ``chunkstore`` writes an npz
 of only the rows present (no grid padding, no fill value), and the
 ``pyds`` DataSource writer is fed an Arrow iterator and commits
-per-attempt temp files.
+per-attempt temp files.  The ``pyds`` DataSource readers plan one
+partition per grid cell and call :func:`emit_row_chunk` from ``read()``.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 
 from pyspark.errors import PythonException
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 _DUP = "chunk-grid write needs dense ids"
 
@@ -184,3 +211,98 @@ def write_chunk_grid(
         else:
             meta(m, [end], [rpc])
     return n_chunks
+
+
+# --- read half -----------------------------------------------------------------
+
+
+def fill_chunk(where: str, chunks: list[int], dtype: np.dtype, fill) -> np.ndarray:
+    """The block of a chunk absent from the store: ``fill`` everywhere
+    (zarr-python omits all-fill chunks by default).  A null fill has no
+    defined contents, so the read raises instead."""
+    if fill is None:
+        raise ValueError(
+            f"chunk {where} is missing and the array declares fill_value"
+            " null, so it has no defined contents"
+        )
+    return np.full(chunks, fill, dtype=dtype)
+
+
+def as_column(vals: np.ndarray, int_kinds: str):
+    """1-D decoded values -> the column the readers emit: int64 for the
+    format's integer kinds, UTF-8 strings for fixed-width bytes (numpy
+    strips the trailing null padding on item access), float64 otherwise."""
+    kind = vals.dtype.kind
+    if kind in int_kinds:
+        return vals.astype(np.int64)
+    if kind == "S":
+        return [b.decode("utf-8") for b in vals]
+    return vals.astype(np.float64)
+
+
+def column_type(dtype: np.dtype, int_kinds: str) -> DataType:
+    """The Spark type of :func:`as_column`'s output for ``dtype``."""
+    kind = np.dtype(dtype).kind
+    return LongType() if kind in int_kinds else StringType() if kind == "S" else DoubleType()
+
+
+def emit_row_chunk(
+    chunk: Callable[[tuple[int, ...]], np.ndarray],
+    shape: list[int],
+    chunks: list[int],
+    r: int,
+    int_kinds: str,
+    cols: tuple[int, ...] | None = None,
+) -> Iterator[pd.DataFrame]:
+    """Row chunk ``r`` as rows, edge padding trimmed by ``shape``: for a
+    2-D array one ``(row, col0, values)`` frame per column chunk in
+    ``cols`` (default: all of them), for a 1-D array one ``(row, value)``
+    frame.  ``chunk(coords)`` returns the full padded block."""
+    row0 = r * int(chunks[0])
+    rows = np.arange(row0, min(row0 + int(chunks[0]), int(shape[0])), dtype=np.int64)
+    if len(shape) == 1:
+        vals = chunk((r,))[: len(rows)]
+        yield pd.DataFrame({"row": rows, "value": as_column(vals, int_kinds)})
+        return
+    cpc = int(chunks[1])
+    for c in range(-(-int(shape[1]) // cpc)) if cols is None else cols:
+        col0 = c * cpc
+        vals = chunk((r, c))[: len(rows), : int(shape[1]) - col0].astype(np.float64)
+        yield pd.DataFrame({"row": rows, "col0": col0, "values": list(vals)})
+
+
+def row_chunks(spark: SparkSession, n_rows: int, rows_per_chunk: int) -> DataFrame:
+    """The read plan's source: one ``id`` per row chunk, one partition per
+    core and at most one per chunk."""
+    n_chunks = -(-n_rows // rows_per_chunk)
+    n_parts = max(1, min(spark.sparkContext.defaultParallelism, n_chunks))
+    return spark.range(n_chunks, numPartitions=n_parts)
+
+
+def read_chunk_grid(
+    spark: SparkSession,
+    meta: dict,
+    chunk: Callable[[tuple[int, ...]], np.ndarray],
+    int_kinds: str,
+    ndim: int,
+    what: str,
+) -> DataFrame:
+    """One array's rows in one ``mapInPandas`` over :func:`row_chunks`:
+    ``(row, col0, values array<double>)`` slices for ``ndim`` 2 and
+    ``(row, value)`` for 1; ``meta`` needs ``shape``, ``chunks`` and
+    ``dtype``.  ``what`` names the reader in the dimension error."""
+    shape, chunks = meta["shape"], meta["chunks"]
+    if len(shape) != ndim:
+        raise ValueError(f"{what} expects a {ndim}-D array, got {shape}")
+    if ndim == 2:
+        fields = [("col0", LongType()), ("values", ArrayType(DoubleType()))]
+    else:
+        fields = [("value", column_type(meta["dtype"], int_kinds))]
+    schema = StructType([StructField(n, t) for n, t in [("row", LongType()), *fields]])
+
+    def _emit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for r in pdf["id"]:
+                yield from emit_row_chunk(chunk, shape, chunks, int(r), int_kinds)
+
+    return row_chunks(spark, int(shape[0]), int(chunks[0])).mapInPandas(_emit, schema=schema)

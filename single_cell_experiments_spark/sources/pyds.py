@@ -10,27 +10,30 @@ downstream operator with no knowledge of the chunk layout.
 
 Split planning is the part that matters at scale and it is explicit here:
 ``ZarrChunkReader.partitions()`` returns ONE InputPartition PER CHUNK
-OBJECT, so Spark schedules decode tasks at exactly the store's parallel
-grain (the same contract a JVM FileSourceScan gets from its split planner
-— and the property the reference's chunked executors were built around).
-The driver reads only the tiny JSON metadata; chunk bytes are opened
-inside ``read()`` on executors, and rows come back as Arrow
-``RecordBatch``es (the vectorized lane of the API — never per-row Python
-tuples).
+GRID CELL, so Spark schedules decode tasks at exactly the store's
+parallel grain (the same contract a JVM FileSourceScan gets from its
+split planner — and the property the reference's chunked executors were
+built around).  The driver reads only the tiny JSON metadata; chunk
+bytes are opened inside ``read()`` on executors through the format's
+full-block fetch and ``chunkgrid.emit_row_chunk`` (the emitter every
+dense Zarr reader shares), and rows come back as Arrow ``RecordBatch``es
+(the vectorized lane of the API — never per-row Python tuples).
 
-Scale notes: the BATCH reader's ``partitions()`` lists the chunk
-directory driver-side ONCE per scan (one listing RPC, like every file
-source's split planner), and each task re-opens its own chunk file —
-fine locally and on shared filesystems; an object-store deployment would
-swap the listing/``open`` for the store SDK inside the same two methods.
-The STREAM reader never relists at all: chunk names are a pure function
-of manifest index, so each ``latestOffset`` poll probes existence only
-past the verified prefix — O(new chunks) per poll, O(1) when idle (r11
-verdict #1).
+Scale notes: neither reader lists a directory.  The BATCH reader's
+``partitions()`` are the grid cells ``shape``/``chunks`` imply, so a scan
+costs one metadata GET on the driver and one chunk GET per task; a chunk
+object absent from the store reads as the array's ``fill_value``, and a
+stray file in the array directory is never opened.  The STREAM reader
+maps a manifest index to its chunk name the same way, so each
+``latestOffset`` poll probes existence only past the verified prefix —
+O(new chunks) per poll, O(1) when idle (r11 verdict #1) — and a planned
+chunk that is missing raises instead of reading as fill.
 """
 
 from __future__ import annotations
 
+import functools
+import itertools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -45,11 +48,12 @@ from pyspark.sql.datasource import (
 )
 
 from ..registry import query
+from .chunkgrid import column_type, emit_row_chunk
 
 
 class ZarrChunkPartition(InputPartition):
-    def __init__(self, chunk_path: str):
-        self.chunk_path = chunk_path
+    def __init__(self, coords: tuple[int, ...]):
+        self.coords = coords
 
 
 def zarr_format_version(array_path: str) -> int:
@@ -65,12 +69,38 @@ def zarr_format_version(array_path: str) -> int:
     )
 
 
+def _grid_format(version: int):
+    """A format generation's ``(metadata reader, full-chunk fetch,
+    integer kinds)`` — what the shared chunk-grid emitter needs."""
+    if version == 2:
+        from .zarrv2 import _INT_KINDS, _read_chunk, read_zarray_meta
+
+        return read_zarray_meta, _read_chunk, _INT_KINDS
+    from .zarrv3 import _INT_KINDS, _read_chunk_v3, read_zarr_v3_meta
+
+    return read_zarr_v3_meta, _read_chunk_v3, _INT_KINDS
+
+
+def _emit_cell(array_path: str, meta: dict, version: int, coords, shape, skip_rows=0):
+    """Arrow batches of one grid cell, trimmed against ``shape`` and
+    without the rows below ``skip_rows``."""
+    import pyarrow as pa
+
+    _, fetch, int_kinds = _grid_format(version)
+    chunk = functools.partial(fetch, array_path, meta)
+    for out in emit_row_chunk(chunk, shape, meta["chunks"], coords[0], int_kinds, coords[1:]):
+        if skip_rows:  # tail rows an earlier batch delivered
+            out = out[out["row"] >= skip_rows]
+        if len(out):
+            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+
+
 class ZarrChunkReader(DataSourceReader):
-    """One InputPartition per chunk object; Arrow-batched decode.  Handles
-    BOTH format generations behind one format string: v2 (``.zarray``,
-    flat ``i.j`` chunk names) and v3 (``zarr.json``, codec chains, both
-    chunk-key encodings incl. the nested ``c/i/j`` default, and
-    ``sharding_indexed`` shard objects)."""
+    """One InputPartition per chunk grid cell; Arrow-batched decode.
+    Handles BOTH format generations behind one format string: v2
+    (``.zarray``, flat ``i.j`` chunk names) and v3 (``zarr.json``, codec
+    chains, both chunk-key encodings incl. the nested ``c/i/j`` default,
+    and ``sharding_indexed`` shard objects)."""
 
     def __init__(self, options: dict):
         path = options.get("path")
@@ -78,61 +108,31 @@ class ZarrChunkReader(DataSourceReader):
             raise ValueError("sce_zarr requires .option('path', <array dir>)")
         self.array_path = path
         self.version = zarr_format_version(path)
-        if self.version == 2:
-            from .zarrv2 import _CHUNK_NAME, read_zarray_meta
-
-            self.meta = read_zarray_meta(path)  # driver: one small JSON read
-            self.chunk_paths = [
-                os.path.join(path, n)
-                for n in sorted(n for n in os.listdir(path) if _CHUNK_NAME.match(n))
-            ]
-        else:
-            from .zarrv3 import read_zarr_v3_meta
-
-            self.meta = read_zarr_v3_meta(path)
-            paths = []
-            for dirpath, _, names in os.walk(path):  # default keys nest c/i/j
-                for nm in names:
-                    if (
-                        nm != "zarr.json"
-                        and not nm.startswith(".")
-                        and _TMP_MARK not in nm
-                    ):
-                        paths.append(os.path.join(dirpath, nm))
-            self.chunk_paths = sorted(paths)
+        self.meta = _grid_format(self.version)[0](path)  # driver: one small JSON read
 
     def partitions(self):
-        return [ZarrChunkPartition(p) for p in self.chunk_paths]
+        shape, chunks = self.meta["shape"], self.meta["chunks"]
+        counts = [-(-int(s) // int(c)) for s, c in zip(shape, chunks)]
+        return [ZarrChunkPartition(c) for c in itertools.product(*map(range, counts))]
 
     def read(self, partition: ZarrChunkPartition):
-        import pandas as pd
-        import pyarrow as pa
-
-        if self.version == 2:
-            from .zarrv2 import _decode_blocks
-
-            decode = _decode_blocks(self.meta)
-        else:
-            from .zarrv3 import _decode_blocks_v3
-
-            decode = _decode_blocks_v3(self.array_path, self.meta)
-        with open(partition.chunk_path, "rb") as fh:
-            content = fh.read()
-        pdf_in = pd.DataFrame({"path": [partition.chunk_path], "content": [content]})
-        for out in decode(iter([pdf_in])):
-            yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+        return _emit_cell(
+            self.array_path, self.meta, self.version, partition.coords, self.meta["shape"]
+        )
 
 
 class ZarrStreamPartition(InputPartition):
-    """One chunk object plus the batch's ROW RANGE as of planning:
+    """One chunk object (its path and grid coords) plus the batch's ROW
+    RANGE as of planning:
     executor decode trims the tail against ``plan_rows`` and drops rows
     below ``skip_rows`` (already delivered by an earlier batch when a
     tail chunk grew in place), never consulting a live metadata read —
     so replaying [start, end) after a restart yields bit-identical rows
     even if the store grew in between."""
 
-    def __init__(self, chunk_path: str, plan_rows: int, skip_rows: int = 0):
+    def __init__(self, chunk_path: str, coords, plan_rows: int, skip_rows: int = 0):
         self.chunk_path = chunk_path
+        self.coords = coords
         self.plan_rows = plan_rows
         self.skip_rows = skip_rows
 
@@ -194,22 +194,17 @@ class ZarrChunkStreamReader(DataSourceStreamReader):
         self._rows_seen = 0  # grow-only guard
 
     def _read_meta(self) -> dict:
-        if self.version == 2:
-            from .zarrv2 import read_zarray_meta
+        return _grid_format(self.version)[0](self.array_path)
 
-            return read_zarray_meta(self.array_path)
-        from .zarrv3 import read_zarr_v3_meta
+    def _coords(self, idx: int) -> tuple[int, ...]:
+        """Manifest index -> grid coords (row-major grid order)."""
+        if len(self.meta["shape"]) == 2:
+            return (idx // self.ncol, idx % self.ncol)
+        return (idx // self.ncol,)
 
-        return read_zarr_v3_meta(self.array_path)
-
-    def _chunk_file(self, idx: int) -> str:
-        """Manifest index -> chunk object path (row-major grid order),
-        through the format's chunk-key encoding."""
-        coords = (
-            (idx // self.ncol, idx % self.ncol)
-            if len(self.meta["shape"]) == 2
-            else (idx // self.ncol,)
-        )
+    def _chunk_file(self, coords: tuple[int, ...]) -> str:
+        """Grid coords -> chunk object path, through the format's
+        chunk-key encoding."""
         if self.version == 2:
             name = ".".join(str(c) for c in coords)
         else:
@@ -231,7 +226,7 @@ class ZarrChunkStreamReader(DataSourceStreamReader):
         self._rows_seen = shape0
         n_by_shape = -(-shape0 // self.chunk_rows) * self.ncol
         while self._verified < n_by_shape and os.path.exists(
-            self._chunk_file(self._verified)
+            self._chunk_file(self._coords(self._verified))
         ):
             self._verified += 1
         groups = self._verified // self.ncol  # whole row-chunk groups only
@@ -268,7 +263,8 @@ class ZarrChunkStreamReader(DataSourceStreamReader):
         for g in range(first_group, end_group):
             for c in range(self.ncol):
                 i = g * self.ncol + c
-                p = self._chunk_file(i)
+                coords = self._coords(i)
+                p = self._chunk_file(coords)
                 if not os.path.exists(p):
                     raise RuntimeError(
                         f"sce_zarr stream: chunk object {os.path.basename(p)} "
@@ -276,40 +272,24 @@ class ZarrChunkStreamReader(DataSourceStreamReader):
                         "store shrank below a committed offset; a grow-only "
                         "array never deletes chunks"
                     )
-                parts.append(ZarrStreamPartition(p, end_rows, start_rows))
+                parts.append(ZarrStreamPartition(p, coords, end_rows, start_rows))
         return parts
 
     def read(self, partition: ZarrStreamPartition):
-        import pandas as pd
-        import pyarrow as pa
-
-        with open(partition.chunk_path, "rb") as fh:
-            content = fh.read()
         # Trim against the shape AS PLANNED (carried in the partition), not
         # a live or constructor-time metadata read: deterministic replay.
-        meta = dict(self.meta)
-        meta["shape"] = [partition.plan_rows] + list(self.meta["shape"][1:])
-        if self.version == 2:
-            from .zarrv2 import _decode_blocks
-
-            decode = _decode_blocks(meta)
-        else:
-            from .zarrv3 import _decode_blocks_v3
-
-            decode = _decode_blocks_v3(self.array_path, meta)
-        pdf_in = pd.DataFrame({"path": [partition.chunk_path], "content": [content]})
-        for out in decode(iter([pdf_in])):
-            if partition.skip_rows:  # tail rows an earlier batch delivered
-                out = out[out["row"] >= partition.skip_rows]
-            if len(out):
-                yield pa.RecordBatch.from_pandas(out, preserve_index=False)
+        shape = [partition.plan_rows, *self.meta["shape"][1:]]
+        return _emit_cell(
+            self.array_path, self.meta, self.version, partition.coords, shape,
+            partition.skip_rows,
+        )
 
     def commit(self, end: dict) -> None:
         pass  # offsets live in the checkpoint; nothing source-side to release
 
 
 class ZarrDataSource(DataSource):
-    """``sce_zarr`` format: Zarr v2 array directory → DataFrame.
+    """``sce_zarr`` format: Zarr v2 or v3 array directory → DataFrame.
 
     Schema derives from the array metadata (driver-side), matching the
     mapInPandas readers: 2-D arrays surface as
@@ -322,23 +302,12 @@ class ZarrDataSource(DataSource):
         return "sce_zarr"
 
     def schema(self) -> str:
-        import numpy as np
-
         path = self.options["path"]
-        if zarr_format_version(path) == 2:
-            from .zarrv2 import read_zarray_meta
-
-            meta = read_zarray_meta(path)
-            int_kinds = "iu"
-        else:
-            from .zarrv3 import read_zarr_v3_meta
-
-            meta = read_zarr_v3_meta(path)
-            int_kinds = "iub"  # matches _decode_blocks_v3's int64 lane
+        read_meta, _, int_kinds = _grid_format(zarr_format_version(path))
+        meta = read_meta(path)
         if len(meta["shape"]) == 2:
             return "row bigint, col0 bigint, values array<double>"
-        kind = np.dtype(meta["dtype"]).kind
-        return "row bigint, value " + ("bigint" if kind in int_kinds else "double")
+        return "row bigint, value " + column_type(meta["dtype"], int_kinds).simpleString()
 
     def reader(self, schema) -> ZarrChunkReader:
         return ZarrChunkReader(self.options)
@@ -373,7 +342,7 @@ class ZarrDataSource(DataSource):
 
 
 def read_zarr_pyds(spark: SparkSession, array_path: str) -> DataFrame:
-    """Open a Zarr v2 array through the registered Python DataSource."""
+    """Open a Zarr v2 or v3 array through the registered Python DataSource."""
     spark.dataSource.register(ZarrDataSource)  # idempotent per session
     return spark.read.format("sce_zarr").option("path", array_path).load()
 
@@ -408,7 +377,7 @@ def zarr_pyds_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     result contract to ``zarr_roundtrip`` — what changes is the READ
     ENGINE SURFACE: the store enters the plan as a scan of a registered
     connector with one task per chunk (see module docstring), not as a
-    ``binaryFile``+mapInPandas composition the caller must know to build.
+    ``spark.range``+mapInPandas composition the caller must know to build.
     The value hash proves the connector's split planning, Arrow batch
     path, dtype mapping, and edge-chunk trimming end to end.
     """
@@ -439,8 +408,8 @@ def zarr_pyds_v3_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested ``c/i/j`` default-encoded objects; bytes→blosc→crc32c codec
     chain) → ``spark.read.format("sce_zarr")`` — the same one format
     string now sniffs ``zarr.json`` vs ``.zarray`` and plans one task per
-    chunk object either way.  Hash equality against the parquet oracle
-    proves the v3 metadata parse, nested-key listing, codec chain, and
+    chunk grid cell either way.  Hash equality against the parquet oracle
+    proves the v3 metadata parse, nested-key addressing, codec chain, and
     grid trim compose through the DataSource surface (the mapInPandas v3
     readers proved the decode; this proves the CONNECTOR path).
     """

@@ -27,14 +27,17 @@ Spark-first mapping:
   ``.zgroup`` documents are written only after the chunk job succeeds,
   so a rejected write leaves no readable array.
 - **read**: the driver parses ``.zmetadata`` or each ``.zarray`` (small
-  JSON, one storage GET) and plans the row-chunk grid from it alone:
-  ``spark.range(n_row_chunks)`` then one ``mapInPandas`` whose task opens
-  its row chunk's objects of every member read together and yields
-  finished rows (``read_zarr_rows``, behind ``AnnFrame.from_zarr``) — no
-  listing, no shuffle, no join.  A chunk object absent from the store
-  reads as the array's ``fill_value`` (the spec rule).  The slice readers
-  ``read_zarr_matrix``/``read_zarr_vector`` list chunk objects with
-  ``binaryFile`` instead; both paths share one chunk decoder.
+  JSON, one storage GET) and plans the row-chunk grid from it alone
+  (``chunkgrid.row_chunks``): ``spark.range(n_row_chunks)`` then one
+  ``mapInPandas`` — no listing, no shuffle, no join.  The slice readers
+  ``read_zarr_matrix``/``read_zarr_vector`` (and their consolidated
+  variants) emit each row chunk through ``chunkgrid.read_chunk_grid``;
+  ``read_zarr_rows`` (behind ``AnnFrame.from_zarr``) opens its row
+  chunk's objects of every member read together and yields finished
+  rows.  Both fetch whole blocks through ``_read_chunk``, where a chunk
+  object absent from the store reads as the array's ``fill_value`` (the
+  spec rule); a file in the array directory that is not a chunk of the
+  grid is never opened.
 
 Codecs: ``null`` (raw), ``zlib``, ``gzip`` (stdlib), and ``blosc`` — the
 zarr-python DEFAULT — via the pure-Python container codec in
@@ -49,11 +52,11 @@ matrices, whose obs axis is positional).
 from __future__ import annotations
 
 import base64
+import functools
 import gzip
 import hashlib
 import json
 import os
-import re
 import shutil
 import zlib
 from collections.abc import Callable, Iterator
@@ -63,18 +66,20 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, StructType
 
 from ..catalog import load_table
 from ..registry import query
-from .chunkgrid import Member, dense_rows, write_chunk_grid
+from .chunkgrid import (
+    Member,
+    as_column,
+    column_type,
+    dense_rows,
+    fill_chunk,
+    read_chunk_grid,
+    row_chunks,
+    write_chunk_grid,
+)
 
 ROWS_PER_CHUNK = 64
 
@@ -317,76 +322,25 @@ def _validate_v2_meta(meta: dict, where: str) -> dict:
     return meta
 
 
-_CHUNK_NAME = re.compile(r"^\d+(\.\d+)*$")
-
-
-def _chunk_coords(file_path: str) -> tuple[int, ...]:
-    name = os.path.basename(file_path)
-    if not _CHUNK_NAME.match(name):
-        raise ValueError(f"not a zarr chunk object: {file_path}")
-    return tuple(int(p) for p in name.split("."))
-
-
 def _decode_chunk(blob: bytes, meta: dict) -> np.ndarray:
     """One chunk object -> its full (padded) block: decompress ->
     ``np.frombuffer`` with the spec dtype -> reshape to the chunk shape in
-    the spec order.  The one decoder both readers share."""
+    the spec order."""
     return np.frombuffer(
         _decompress(blob, meta.get("compressor")), dtype=np.dtype(meta["dtype"])
     ).reshape(meta["chunks"], order=meta.get("order", "C"))
 
 
-def _as_column(vals: np.ndarray):
-    """1-D decoded values -> the column the readers emit: int64 for
-    integer dtypes, UTF-8 strings for fixed-width bytes (numpy strips the
-    trailing null padding on item access), float64 otherwise."""
-    kind = vals.dtype.kind
-    if kind in "iu":
-        return vals.astype(np.int64)
-    if kind == "S":
-        return [b.decode("utf-8") for b in vals]
-    return vals.astype(np.float64)
-
-
-def _column_type(meta: dict):
-    kind = np.dtype(meta["dtype"]).kind
-    return LongType() if kind in "iu" else StringType() if kind == "S" else DoubleType()
-
-
-def _decode_blocks(meta: dict):
-    """mapInPandas decode closure over the (driver-parsed) array metadata.
-
-    Yields (row, <trimmed block rows>) for each listed chunk object: the
-    shared ``_decode_chunk``, then trim edge padding via the array shape.
-    """
-    shape, chunks = meta["shape"], meta["chunks"]
-    two_d = len(shape) == 2
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                coords = _chunk_coords(fpath)
-                block = _decode_chunk(bytes(content), meta)
-                row0 = coords[0] * chunks[0]
-                valid = min(chunks[0], shape[0] - row0)
-                if valid <= 0:  # an object past the shape (a rejected append's)
-                    continue
-                rows = np.arange(row0, row0 + valid, dtype=np.int64)
-                if two_d:
-                    col0 = coords[1] * chunks[1]
-                    vals = block[:valid, : shape[1] - col0].astype(np.float64)
-                    yield pd.DataFrame({"row": rows, "col0": col0, "values": list(vals)})
-                else:
-                    yield pd.DataFrame({"row": rows, "value": _as_column(block[:valid])})
-
-    return _decode
+#: integer dtype kinds the v2 readers emit as ``bigint`` (a bool reads as
+#: ``double``)
+_INT_KINDS = "iu"
 
 
 def read_zarr_matrix(spark: SparkSession, array_path: str) -> DataFrame:
     """2-D Zarr v2 array -> (row, col0, values: array<double>) slice rows.
 
-    One driver-side ``.zarray`` GET; chunk objects are listed and decoded
-    executor-side (``binaryFile`` splits the listing across tasks).  Each
+    One driver-side ``.zarray`` GET plans the row-chunk grid; each task
+    fetches its row chunk's objects (``chunkgrid.read_chunk_grid``).  Each
     output row is one chunk's slice of one matrix row starting at global
     column ``col0`` (always 0 for row-chunked layouts — exactly one slice
     per row, no regroup needed).  For a column-chunked grid, callers
@@ -395,39 +349,23 @@ def read_zarr_matrix(spark: SparkSession, array_path: str) -> DataFrame:
     ``zarr_matrix_coo``; the registered ``zarr_colchunk_roundtrip`` query
     hash-checks this path end to end).
     """
-    return _plan_listed_read(spark, array_path, read_zarray_meta(array_path), 2)
+    return _read_grid(spark, array_path, read_zarray_meta(array_path), 2)
 
 
 def read_zarr_vector(spark: SparkSession, array_path: str) -> DataFrame:
     """1-D Zarr v2 array -> (row: bigint, value: bigint|double|string) rows."""
-    return _plan_listed_read(spark, array_path, read_zarray_meta(array_path), 1)
+    return _read_grid(spark, array_path, read_zarray_meta(array_path), 1)
 
 
-def _plan_listed_read(
-    spark: SparkSession, array_path: str, meta: dict, ndim: int
-) -> DataFrame:
-    """``binaryFile`` lists the chunk objects across tasks, then
-    ``_decode_blocks`` decodes each one."""
-    if len(meta["shape"]) != ndim:
-        kind = "matrix" if ndim == 2 else "vector"
-        raise ValueError(f"read_zarr_{kind} expects a {ndim}-D array, got {meta['shape']}")
-    if ndim == 2:
-        fields = [("col0", LongType()), ("values", ArrayType(DoubleType()))]
-    else:
-        fields = [("value", _column_type(meta))]
-    schema = StructType([StructField(n, t) for n, t in [("row", LongType()), *fields]])
-    files = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "[0-9]*")
-        .load(array_path)
-    )
-    return files.select("path", "content").mapInPandas(_decode_blocks(meta), schema=schema)
+def _read_grid(spark: SparkSession, array_path: str, meta: dict, ndim: int) -> DataFrame:
+    kind = "matrix" if ndim == 2 else "vector"
+    chunk = functools.partial(_read_chunk, array_path, meta)
+    return read_chunk_grid(spark, meta, chunk, _INT_KINDS, ndim, f"read_zarr_{kind}")
 
 
 def _read_chunk(array_path: str, meta: dict, coords: tuple[int, ...]) -> np.ndarray:
     """The full block at grid ``coords``.  A chunk object absent from the
-    store reads as the array's ``fill_value`` (the Zarr v2 rule;
-    zarr-python >= 2.11 omits all-fill chunks by default)."""
+    store reads as the array's ``fill_value`` (``chunkgrid.fill_chunk``)."""
     key = ".".join(str(c) for c in coords)
     try:
         with open(os.path.join(array_path, key), "rb") as fh:
@@ -435,14 +373,9 @@ def _read_chunk(array_path: str, meta: dict, coords: tuple[int, ...]) -> np.ndar
     except FileNotFoundError:
         pass
     fill, dtype = meta.get("fill_value"), np.dtype(meta["dtype"])
-    if fill is None:
-        raise ValueError(
-            f"chunk {key!r} is missing from {array_path} and the array"
-            " declares fill_value null, so it has no defined contents"
-        )
-    if dtype.kind == "S":  # the spec stores a bytes fill as base64
+    if fill is not None and dtype.kind == "S":  # the spec stores a bytes fill as base64
         fill = base64.b64decode(fill)
-    return np.full(meta["chunks"], fill, dtype=dtype)
+    return fill_chunk(f"{key!r} of {array_path}", meta["chunks"], dtype, fill)
 
 
 def read_zarr_rows(
@@ -462,8 +395,8 @@ def read_zarr_rows(
     members.  ``meta_of(member)`` gives validated metadata; a member
     without ``n_rows`` rows raises ``ValueError`` naming it.
 
-    Plan: ``spark.range`` over the first member's row-chunk grid (one
-    partition per core, at most one per chunk) and one ``mapInPandas``.
+    Plan: ``chunkgrid.row_chunks`` over the first member's row-chunk grid
+    and one ``mapInPandas``.
     Each row chunk's task decodes every column chunk of the matrix and
     the chunks of each 1-D member overlapping its rows (chunk sizes may
     differ per member), trims edge padding and yields finished rows.
@@ -478,11 +411,13 @@ def read_zarr_rows(
                 f" {n_rows} rows along the axis it annotates"
             )
     grid = int(metas[names[0]]["chunks"][0])
-    n_chunks = -(-n_rows // grid)
     schema = StructType(
         [StructField(key, LongType())]
         + ([StructField("values", ArrayType(DoubleType()))] if matrix else [])
-        + [StructField(c, _column_type(metas[n])) for c, n in columns.items()]
+        + [
+            StructField(c, column_type(metas[n]["dtype"], _INT_KINDS))
+            for c, n in columns.items()
+        ]
     )
 
     def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -523,11 +458,10 @@ def read_zarr_rows(
                 if matrix:
                     out["values"] = list(rows(matrix, r0, r1).astype(np.float64))
                 for c, n in columns.items():
-                    out[c] = _as_column(rows(n, r0, r1))
+                    out[c] = as_column(rows(n, r0, r1), _INT_KINDS)
                 yield pd.DataFrame(out)
 
-    n_parts = max(1, min(spark.sparkContext.defaultParallelism, n_chunks))
-    return spark.range(n_chunks, numPartitions=n_parts).mapInPandas(_decode, schema=schema)
+    return row_chunks(spark, n_rows, grid).mapInPandas(_decode, schema=schema)
 
 
 _ZARR_ROUNDTRIP_ORACLE = """
@@ -735,9 +669,9 @@ def read_zarr_matrix_consolidated(
 ) -> DataFrame:
     """``read_zarr_matrix`` planned from the group's ``.zmetadata`` —
     zero per-array metadata reads (the member ``.zarray`` is never
-    opened); chunk objects are still listed and decoded executor-side."""
+    opened)."""
     meta = member_meta(group_path, read_consolidated_meta(group_path), array)
-    return _plan_listed_read(spark, os.path.join(group_path, array), meta, 2)
+    return _read_grid(spark, os.path.join(group_path, array), meta, 2)
 
 
 def read_zarr_vector_consolidated(
@@ -745,7 +679,7 @@ def read_zarr_vector_consolidated(
 ) -> DataFrame:
     """``read_zarr_vector`` planned from the group's ``.zmetadata``."""
     meta = member_meta(group_path, read_consolidated_meta(group_path), array)
-    return _plan_listed_read(spark, os.path.join(group_path, array), meta, 1)
+    return _read_grid(spark, os.path.join(group_path, array), meta, 1)
 
 
 @query(

@@ -23,15 +23,18 @@ Zarr v3 layout (public spec, zarr-specs v3.0):
   for the default key encoding.
 
 Spark-first mapping — identical shape to ``zarrv2`` (one driver-side
-JSON GET for metadata; ``binaryFile`` + ``mapInPandas`` for the chunk
-grid), so the v3 module is metadata parsing + the codec chain, and the
-COO assembly (``zarrv2.zarr_matrix_coo``) is shared.  Every writer
-(group plain and sharded, dictionary vector, obsm member) is one call of
-the shared ``chunkgrid.write_chunk_grid``; ``_v3_put`` supplies the
-codec chain or shard packing and the key encoding, and ``zarr.json``
-documents are written only after the chunk job succeeds.  The nested
-``c/0/1`` tree is listed with ``recursiveFileLookup`` — on object
-stores that is the same flat LIST the flat v2 layout needs.
+JSON GET for metadata, then the shared chunk grid), so the v3 module is
+metadata parsing + the codec chain, and the COO assembly
+(``zarrv2.zarr_matrix_coo``) is shared.  Every writer (group plain and
+sharded, dictionary vector, obsm member) is one call of the shared
+``chunkgrid.write_chunk_grid``; ``_v3_put`` supplies the codec chain or
+shard packing and the key encoding, and ``zarr.json`` documents are
+written only after the chunk job succeeds.  Every reader is one call of
+``chunkgrid.read_chunk_grid``, planned from ``shape`` and ``chunks``
+alone; ``_read_chunk_v3`` supplies the block at grid coords through the
+key encoding (nested ``c/0/1`` or v2-style), then the codec chain or
+the shard index.  Nothing is listed: on object stores that saves the
+LIST, and a chunk object absent from the store reads as ``fill_value``.
 
 Codecs: ``bytes`` (little/big endian), ``gzip`` (stdlib), ``blosc``
 (the pure-Python container codec in ``blosc_py`` — v3 spells shuffle as
@@ -51,29 +54,22 @@ garbage-decode.
 
 from __future__ import annotations
 
+import functools
 import gzip
 import hashlib
 import json
 import os
 import shutil
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from ..catalog import load_table
 from ..registry import query
-from .chunkgrid import Member, dense_rows, write_chunk_grid
+from .chunkgrid import Member, dense_rows, fill_chunk, read_chunk_grid, write_chunk_grid
 
 # --- crc32c (Castagnoli, reflected poly 0x82F63B78) ---------------------------
 
@@ -406,22 +402,6 @@ def _encode_shard(
 # --- chunk keys ------------------------------------------------------------------
 
 
-def _chunk_coords_v3(array_path: str, file_path: str, keyenc: dict) -> tuple[int, ...]:
-    """Grid coords from a chunk object path, per the array's key encoding
-    (``default``: ``c<sep>0<sep>1`` — nested dirs for ``/``;
-    ``v2``: coords joined by the separator, no prefix)."""
-    rel = file_path.split(array_path.rstrip("/") + "/", 1)[-1]
-    sep = (keyenc.get("configuration") or {}).get(
-        "separator", "/" if keyenc.get("name") == "default" else "."
-    )
-    parts = rel.replace("/", sep).split(sep) if sep != "/" else rel.split("/")
-    if keyenc.get("name") == "default":
-        if not parts or parts[0] != "c":
-            raise ValueError(f"not a v3 default-encoded chunk key: {rel!r}")
-        parts = parts[1:]
-    return tuple(int(p) for p in parts)
-
-
 def _chunk_key_v3(coords: tuple[int, ...], keyenc: dict) -> str:
     sep = (keyenc.get("configuration") or {}).get(
         "separator", "/" if keyenc.get("name") == "default" else "."
@@ -433,97 +413,47 @@ def _chunk_key_v3(coords: tuple[int, ...], keyenc: dict) -> str:
 # --- read ------------------------------------------------------------------------
 
 
-def _decode_blocks_v3(array_path: str, meta: dict):
-    """mapInPandas decode closure (the ``zarrv2._decode_blocks`` shape):
-    codec-chain decode → ``np.frombuffer`` with the bytes-codec dtype →
-    reshape C-order → trim edge padding via the array shape."""
-    shape, chunks = meta["shape"], meta["chunks"]
-    dtype, codecs, keyenc = meta["dtype"], meta["codecs"], meta["key_encoding"]
-    two_d = len(shape) == 2
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                coords = _chunk_coords_v3(array_path, fpath, keyenc)
-                if meta.get("sharding"):
-                    block = _decode_shard(bytes(content), meta)
-                else:
-                    block = np.frombuffer(
-                        _decode_chain(bytes(content), codecs), dtype=dtype
-                    ).reshape(chunks)
-                row0 = coords[0] * chunks[0]
-                valid = min(chunks[0], shape[0] - row0)
-                rows = np.arange(row0, row0 + valid, dtype=np.int64)
-                if two_d:
-                    col0 = coords[1] * chunks[1] if len(coords) > 1 else 0
-                    vcols = min(chunks[1], shape[1] - col0)
-                    yield pd.DataFrame(
-                        {
-                            "row": rows,
-                            "col0": np.full(valid, col0, dtype=np.int64),
-                            "values": list(block[:valid, :vcols].astype(np.float64)),
-                        }
-                    )
-                else:
-                    vals = block[:valid]
-                    out = (
-                        vals.astype(np.int64)
-                        if dtype.kind in "iub"
-                        else vals.astype(np.float64)
-                    )
-                    yield pd.DataFrame({"row": rows, "value": out})
-
-    return _decode
+#: integer dtype kinds the v3 readers emit as ``bigint`` (a bool reads as
+#: ``bigint`` too)
+_INT_KINDS = "iub"
 
 
-def _v3_chunk_files(spark: SparkSession, array_path: str) -> DataFrame:
-    """List chunk objects under the array root — recursive because the
-    default key encoding nests ``c/0/1`` directory trees — excluding the
-    metadata document."""
-    return (
-        spark.read.format("binaryFile")
-        .option("recursiveFileLookup", "true")
-        .load(array_path)
-        .where(~F.col("path").endswith("zarr.json"))
-        .select("path", "content")
+def _read_chunk_v3(array_path: str, meta: dict, coords: tuple[int, ...]) -> np.ndarray:
+    """The full block at grid ``coords``: the object named by the key
+    encoding, decoded through the codec chain (or unpacked from its
+    shard).  A chunk object absent from the store reads as the array's
+    ``fill_value`` (``chunkgrid.fill_chunk``)."""
+    key = _chunk_key_v3(coords, meta["key_encoding"])
+    try:
+        with open(os.path.join(array_path, key), "rb") as fh:
+            blob = fh.read()
+    except FileNotFoundError:
+        return fill_chunk(
+            f"{key!r} of {array_path}", meta["chunks"], meta["dtype"], meta["fill_value"]
+        )
+    if meta["sharding"]:
+        return _decode_shard(blob, meta)
+    return np.frombuffer(_decode_chain(blob, meta["codecs"]), dtype=meta["dtype"]).reshape(
+        meta["chunks"]
     )
+
+
+def _read_grid_v3(spark: SparkSession, array_path: str, meta: dict, ndim: int) -> DataFrame:
+    kind = "matrix" if ndim == 2 else "vector"
+    chunk = functools.partial(_read_chunk_v3, array_path, meta)
+    return read_chunk_grid(spark, meta, chunk, _INT_KINDS, ndim, f"read_zarr_v3_{kind}")
 
 
 def read_zarr_v3_matrix(spark: SparkSession, array_path: str) -> DataFrame:
     """2-D Zarr v3 array -> (row, col0, values: array<double>) slice rows
     — the ``zarrv2.read_zarr_matrix`` contract, so ``zarr_matrix_coo``
     and every downstream consumer work unchanged on v3 stores."""
-    return _plan_v3_matrix_read(spark, array_path, read_zarr_v3_meta(array_path))
-
-
-def _plan_v3_matrix_read(spark: SparkSession, array_path: str, meta: dict) -> DataFrame:
-    if len(meta["shape"]) != 2:
-        raise ValueError(f"read_zarr_v3_matrix expects 2-D, got {meta['shape']}")
-    schema = StructType(
-        [
-            StructField("row", LongType()),
-            StructField("col0", LongType()),
-            StructField("values", ArrayType(DoubleType())),
-        ]
-    )
-    return _v3_chunk_files(spark, array_path).mapInPandas(
-        _decode_blocks_v3(array_path, meta), schema=schema
-    )
+    return _read_grid_v3(spark, array_path, read_zarr_v3_meta(array_path), 2)
 
 
 def read_zarr_v3_vector(spark: SparkSession, array_path: str) -> DataFrame:
     """1-D Zarr v3 array -> (row: bigint, value: bigint|double) rows."""
-    return _plan_v3_vector_read(spark, array_path, read_zarr_v3_meta(array_path))
-
-
-def _plan_v3_vector_read(spark: SparkSession, array_path: str, meta: dict) -> DataFrame:
-    if len(meta["shape"]) != 1:
-        raise ValueError(f"read_zarr_v3_vector expects 1-D, got {meta['shape']}")
-    vtype = LongType() if meta["dtype"].kind in "iub" else DoubleType()
-    schema = StructType([StructField("row", LongType()), StructField("value", vtype)])
-    return _v3_chunk_files(spark, array_path).mapInPandas(
-        _decode_blocks_v3(array_path, meta), schema=schema
-    )
+    return _read_grid_v3(spark, array_path, read_zarr_v3_meta(array_path), 1)
 
 
 # --- write -----------------------------------------------------------------------
@@ -865,7 +795,7 @@ def read_zarr_v3_matrix_consolidated(
     """``read_zarr_v3_matrix`` planned from the group's inline
     consolidated metadata — the member ``zarr.json`` is never opened."""
     meta = _consolidated_v3_array_meta(group_path, array)
-    return _plan_v3_matrix_read(spark, os.path.join(group_path, array), meta)
+    return _read_grid_v3(spark, os.path.join(group_path, array), meta, 2)
 
 
 def read_zarr_v3_vector_consolidated(
@@ -874,7 +804,7 @@ def read_zarr_v3_vector_consolidated(
     """``read_zarr_v3_vector`` planned from the group's inline
     consolidated metadata."""
     meta = _consolidated_v3_array_meta(group_path, array)
-    return _plan_v3_vector_read(spark, os.path.join(group_path, array), meta)
+    return _read_grid_v3(spark, os.path.join(group_path, array), meta, 1)
 
 
 @query(

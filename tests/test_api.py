@@ -959,11 +959,21 @@ def _x_rows(af: AnnFrame) -> dict:
     return {int(r["row_id"]): list(r["values"]) for r in af.x.collect()}
 
 
+def _assert_one_grid_pass(df) -> None:
+    """A dense Zarr read is one shuffle-free mapInPandas over the chunk
+    grid, planned from metadata: no binaryFile listing scan."""
+    from single_cell_experiments_spark.plans import inspect
+
+    plan = inspect.executed_plan(df)
+    assert inspect.exchange_count(df) == 0
+    assert plan.count("MapInPandas") == 1
+    assert "binaryFile" not in plan
+
+
 def test_from_zarr_column_chunked_matches_row_chunked_in_one_pass(spark, tmp_path):
     """from_zarr over a column-chunked grid (edge-padded on the row axis)
     equals the row-chunked read, and both plan X as one shuffle-free
     mapInPandas over the chunk grid."""
-    from single_cell_experiments_spark.plans import inspect
     from single_cell_experiments_spark.sources.zarrv2 import write_zarr_group
 
     e = load_table(spark, SF_DIR, "embeddings").where(F.col("vec_id") < 63)
@@ -975,15 +985,122 @@ def test_from_zarr_column_chunked_matches_row_chunked_in_one_pass(spark, tmp_pat
     assert len(want) == 63
     assert _x_rows(b) == want
     for af in (a, b):
-        assert inspect.exchange_count(af.x) == 0
-        assert inspect.executed_plan(af.x).count("MapInPandas") == 1
+        _assert_one_grid_pass(af.x)
 
 
-def test_from_zarr_reads_missing_chunk_as_fill_value(spark, tmp_path):
-    """Zarr v2: a chunk object absent from the store reads as the array's
-    fill_value (zarr-python omits all-fill chunks) — the rows stay, filled;
-    an array declaring fill_value null cannot be filled and refuses."""
+#: 100 rows in 32-row chunks: four row chunks, the last one edge-padded
+_GRID_ROWS, _GRID_RPC = 100, 32
+
+
+def _grid_store(spark, root: str, kind: str) -> str:
+    """The first ``_GRID_ROWS`` embeddings as a group in ``kind``'s
+    format — Zarr v3 for ``v3*`` and ``pyds_v3`` (16-row inner chunks in
+    32-row shards for ``v3_sharded``), Zarr v2 otherwise, consolidated
+    for ``*_consolidated`` — and the X array dir."""
     import os
+
+    from single_cell_experiments_spark.sources.zarrv2 import (
+        consolidate_metadata,
+        write_zarr_group,
+    )
+    from single_cell_experiments_spark.sources.zarrv3 import (
+        consolidate_metadata_v3,
+        write_zarr_v3_group,
+    )
+
+    e = load_table(spark, SF_DIR, "embeddings").where(F.col("vec_id") < _GRID_ROWS)
+    if "v3" in kind:
+        shard = 16 if kind == "v3_sharded" else None
+        write_zarr_v3_group(e, root, rows_per_chunk=_GRID_RPC, shard_inner_rows=shard)
+        if kind.endswith("consolidated"):
+            consolidate_metadata_v3(root)
+    else:
+        write_zarr_group(e, root, rows_per_chunk=_GRID_RPC)
+        if kind.endswith("consolidated"):
+            consolidate_metadata(root)
+    return os.path.join(root, "X")
+
+
+def _grid_read(spark, x_dir: str, kind: str):
+    """X of ``_grid_store`` through the reader ``kind`` names."""
+    import os
+
+    from single_cell_experiments_spark.sources import zarrv2, zarrv3
+    from single_cell_experiments_spark.sources.pyds import read_zarr_pyds
+
+    group = os.path.dirname(x_dir)
+    return {
+        "v2": lambda: zarrv2.read_zarr_matrix(spark, x_dir),
+        "v2_consolidated": lambda: zarrv2.read_zarr_matrix_consolidated(spark, group),
+        "v3": lambda: zarrv3.read_zarr_v3_matrix(spark, x_dir),
+        "v3_sharded": lambda: zarrv3.read_zarr_v3_matrix(spark, x_dir),
+        "v3_consolidated": lambda: zarrv3.read_zarr_v3_matrix_consolidated(spark, group),
+        "pyds": lambda: read_zarr_pyds(spark, x_dir),
+        "pyds_v3": lambda: read_zarr_pyds(spark, x_dir),
+    }[kind]()
+
+
+def _slice_rows(df) -> dict:
+    return {int(r["row"]): list(r["values"]) for r in df.collect()}
+
+
+@pytest.mark.parametrize("kind", ["v2", "v3", "v3_sharded", "v2_consolidated", "v3_consolidated"])
+def test_dense_zarr_readers_plan_one_grid_pass_in_one_job(spark, tmp_path, kind):
+    """Every dense Zarr reader is the chunkgrid read plan: one
+    shuffle-free mapInPandas with no listing scan, one Spark job."""
+    from tests.conftest import count_jobs
+
+    x_dir = _grid_store(spark, str(tmp_path / kind), kind)
+    df = _grid_read(spark, x_dir, kind)
+    assert count_jobs(spark, df.collect) == 1
+    _assert_one_grid_pass(df)
+    assert len(_slice_rows(df)) == _GRID_ROWS
+
+
+@pytest.mark.parametrize("kind", ["v2", "v3", "v3_sharded", "pyds", "pyds_v3"])
+def test_dense_zarr_readers_ignore_files_outside_the_grid(spark, tmp_path, kind):
+    """A file in the array directory that is not a chunk of the grid —
+    the sce_zarr sink's temp name ``1.0.__tmp__1`` (it matches a ``[0-9]*``
+    glob) or a stray ``notes.txt`` — is never opened: all rows read back."""
+    import os
+
+    x_dir = _grid_store(spark, str(tmp_path / kind), kind)
+    want = _slice_rows(_grid_read(spark, x_dir, kind))
+    for name in ("1.0.__tmp__1", "notes.txt"):
+        with open(os.path.join(x_dir, name), "wb") as fh:
+            fh.write(b"not a chunk")
+    got = _slice_rows(_grid_read(spark, x_dir, kind))
+    assert len(got) == _GRID_ROWS
+    assert got == want
+
+
+@pytest.mark.parametrize("kind", ["from_zarr", "v2", "v3", "v3_sharded", "pyds"])
+def test_from_zarr_reads_missing_chunk_as_fill_value(spark, tmp_path, kind):
+    """Every dense Zarr reader: a chunk object absent from the store reads
+    as the array's fill_value (zarr-python omits all-fill chunks) — the
+    rows stay, filled; an array declaring fill_value null cannot be
+    filled and refuses."""
+    import json
+    import os
+
+    if kind != "from_zarr":
+        x_dir = _grid_store(spark, str(tmp_path / kind), kind)
+        want = _slice_rows(_grid_read(spark, x_dir, kind))
+        v3 = kind.startswith("v3")
+        os.remove(os.path.join(x_dir, "c/1/0" if v3 else "1.0"))
+        got = _slice_rows(_grid_read(spark, x_dir, kind))
+        assert len(got) == len(want) == _GRID_ROWS
+        filled = range(_GRID_RPC, 2 * _GRID_RPC)
+        assert all(got[r] == [0.0] * len(want[r]) for r in filled)
+        assert all(got[r] == want[r] for r in want if r not in filled)
+        doc = os.path.join(x_dir, "zarr.json" if v3 else ".zarray")
+        with open(doc) as fh:
+            meta = json.load(fh)
+        with open(doc, "w") as fh:
+            json.dump({**meta, "fill_value": None}, fh)
+        with pytest.raises(Exception, match="fill_value null"):
+            _grid_read(spark, x_dir, kind).collect()
+        return
 
     af = _af(spark)
     store = str(tmp_path / "grp")

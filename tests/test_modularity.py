@@ -97,6 +97,16 @@ def _sym(pairs: list[tuple[int, int]]) -> list[tuple[int, int]]:
     return sorted(out)
 
 
+@pytest.fixture(scope="module")
+def knn_edges(spark) -> list[tuple[int, int]]:
+    """The symmetrized sf0.001 kNN graph the community operators run on,
+    collected once for the module."""
+    from single_cell_experiments_spark.operators.singlecell import sc_neighbor_edges
+
+    knn = sc_neighbor_edges(spark, SF_DIR).select("vec_id", "nbr").collect()
+    return _sym([(r.vec_id, r.nbr) for r in knn])
+
+
 def _spark_louvain(spark, edges, stats=None) -> dict[int, int]:
     df = spark.createDataFrame(edges, "src long, dst long")
     res = louvain_phase1_labels(df, SC_MODULARITY_ROUNDS, stats=stats)
@@ -142,7 +152,7 @@ def test_louvain_matches_reference_on_random_graphs(spark, seed):
     )
 
 
-def test_sc_communities_modularity_on_real_graph(spark):
+def test_sc_communities_modularity_on_real_graph(spark, knn_edges):
     """End-to-end over sf0.001 embeddings: every cell labeled, the
     best-state selection picked a non-initial round with positive Q
     (community structure, not noise), and the partition is non-trivial
@@ -158,14 +168,10 @@ def test_sc_communities_modularity_on_real_graph(spark):
     ncomm = len(set(rows.values()))
     assert 1 < ncomm < n_emb
     # objective check on the same graph the operator used
-    from single_cell_experiments_spark.operators.singlecell import sc_neighbor_edges
-
-    knn = sc_neighbor_edges(spark, SF_DIR).select("vec_id", "nbr").collect()
-    edges = _sym([(r.vec_id, r.nbr) for r in knn])
-    assert modularity(edges, rows) > 0.0
+    assert modularity(knn_edges, rows) > 0.0
 
 
-def test_modularity_vs_lpa_partition_relation(spark):
+def test_modularity_vs_lpa_partition_relation(spark, knn_edges):
     """Recorded negative result (r10): the r9 verdict suggested asserting
     that the modularity step REFINES sc_communities' LPA partition — it
     does not (measured on sf0.001: only 60/183 greedy communities sit
@@ -176,17 +182,12 @@ def test_modularity_vs_lpa_partition_relation(spark):
     pinning: both partitions have positive modularity on the kNN graph
     (structure, not noise), and the greedy step never returns a WORSE-
     than-singleton partition by construction (best-state selection)."""
-    from single_cell_experiments_spark.operators.singlecell import (
-        sc_neighbor_edges,
-    )
-
     lpa = {r.vec_id: r.community for r in sc_communities(spark, SF_DIR).collect()}
     mod = {
         r.vec_id: r.community
         for r in sc_communities_modularity(spark, SF_DIR).collect()
     }
-    knn = sc_neighbor_edges(spark, SF_DIR).select("vec_id", "nbr").collect()
-    edges = _sym([(r.vec_id, r.nbr) for r in knn])
+    edges = knn_edges
     q_mod, q_lpa = modularity(edges, mod), modularity(edges, lpa)
     assert q_mod > 0.0 and q_lpa > 0.0
     singleton = {u: u for u in mod}
@@ -339,18 +340,14 @@ def test_community_job_count_bound(spark, name):
     assert 0 < jobs <= COMMUNITY_MAX_JOBS[name] + AQE_JOB_SPREAD, jobs
 
 
-def test_louvain2_matches_reference_and_improves_q(spark):
+def test_louvain2_matches_reference_and_improves_q(spark, knn_edges):
     """Two-level Spark == two-level reference on the sf0.001 kNN graph,
     and the coarsened pass genuinely escapes the level-1 plateau:
     Q(level 2) > Q(level 1) (measured 0.233 -> 0.372 when this was
     written — the Blondel coarsening doing its job)."""
-    from single_cell_experiments_spark.operators.singlecell import (
-        sc_communities_louvain2,
-        sc_neighbor_edges,
-    )
+    from single_cell_experiments_spark.operators.singlecell import sc_communities_louvain2
 
-    knn = sc_neighbor_edges(spark, SF_DIR).select("vec_id", "nbr").collect()
-    edges = _sym([(r.vec_id, r.nbr) for r in knn])
+    edges = knn_edges
     got = {
         r.vec_id: r.community
         for r in sc_communities_louvain2(spark, SF_DIR).collect()
@@ -576,7 +573,7 @@ def test_leiden_refine_is_partition_refinement(spark, seed):
         )
 
 
-def test_sc_communities_leiden_connectivity_guarantee(spark):
+def test_sc_communities_leiden_connectivity_guarantee(spark, knn_edges):
     """Leiden's headline theorem, property-tested end-to-end on the
     sf0.001 kNN graph: EVERY returned community is internally connected
     (union-find over the community-induced subgraph finds exactly one
@@ -587,11 +584,9 @@ def test_sc_communities_leiden_connectivity_guarantee(spark):
     from single_cell_experiments_spark.operators.singlecell import (
         SC_LEIDEN_GAMMA,
         sc_communities_leiden,
-        sc_neighbor_edges,
     )
 
-    knn = sc_neighbor_edges(spark, SF_DIR).select("vec_id", "nbr").collect()
-    edges = _sym([(r.vec_id, r.nbr) for r in knn])
+    edges = knn_edges
     got = {
         r.vec_id: r.community for r in sc_communities_leiden(spark, SF_DIR).collect()
     }

@@ -908,21 +908,24 @@ def test_pyds_stream_writer_grow_only_multibatch(tmp_path):
     with pytest.raises(ValueError, match="rectangular"):
         w.commit([bad3], batchId=3)
 
-    # read back: chunk 0 values + frozen padded tail of chunk 1
-    from single_cell_experiments_spark.sources.zarrv2 import _decode_blocks
-    import pandas as pd
+    # read back through the shared emitter: chunk 0 values + frozen
+    # padded tail of chunk 1
+    import functools
+
+    from single_cell_experiments_spark.sources.chunkgrid import emit_row_chunk
+    from single_cell_experiments_spark.sources.zarrv2 import _INT_KINDS, _read_chunk
 
     meta = read_zarray_meta(path)
-    decode = _decode_blocks(meta)
-    with open(os.path.join(path, "0.0"), "rb") as fh:
-        c0 = fh.read()
-    out = next(decode(iter([pd.DataFrame({"path": ["0.0"], "content": [c0]})])))
+    chunk = functools.partial(_read_chunk, path, meta)
+
+    def decode(r):
+        return next(emit_row_chunk(chunk, meta["shape"], meta["chunks"], r, _INT_KINDS))
+
+    out = decode(0)
     row0 = out[out["row"] == 0].iloc[0]
     assert list(row0["values"]) == [0.0, 0.5]
 
-    with open(os.path.join(path, "1.0"), "rb") as fh:
-        c1 = fh.read()
-    out1 = next(decode(iter([pd.DataFrame({"path": ["1.0"], "content": [c1]})])))
+    out1 = decode(1)
     r66 = out1[out1["row"] == ROWS_PER_CHUNK + 2].iloc[0]
     assert list(r66["values"]) == [102.0, 0.25]
 
