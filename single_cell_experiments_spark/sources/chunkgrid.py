@@ -3,8 +3,10 @@
 repartition; ref ``zarr_spark.py``'s one read and one write helper).
 
 Every positional writer — Zarr v2 (``zarrv2``), Zarr v3 plain and
-sharded (``zarrv3``) and the CSR/CSC member arrays (``sparse``) — is one
-call of :func:`write_chunk_grid`:
+sharded (``zarrv3``) and the CSR/CSC ``indices``/``data`` arrays
+(``sparse``, fed by its per-row-block placement pass, which writes each
+block's ``indptr`` chunk with the same v2 ``put``) — is one call of
+:func:`write_chunk_grid`:
 
 - ``groupBy(id div rows_per_chunk) ⟶ applyInPandas``: the exchange IS
   the chunk-aligned repartition, one task per row chunk, no driver

@@ -1,28 +1,29 @@
-"""Sparse CSR matrix encoding for the Zarr v2 group (r14 verdict #2).
+"""Sparse CSR/CSC matrix encodings for the Zarr v2 group (r14 verdict #2).
 
 AnnData ships real 10x matrices sparse: the group ``X`` is not one dense
 2-D array but a subgroup of three 1-D arrays — ``indptr`` (int64,
-n_rows+1 row extents), ``indices`` (int64, nnz column indices), ``data``
-(float64, nnz values) — tagged ``encoding-type: csr_matrix`` in the
-group's ``.zattrs`` (the public AnnData on-disk spec; the reference's
-flagship 1.3M-neuron matrix is ~93% zeros, so dense rows would be ~30×
-the bytes).  This module writes and reads that encoding with the same
-distributed chunk machinery as the dense writer (``zarrv2.py``):
+n_major+1 extents), ``indices`` (int64, nnz minor ids), ``data``
+(float64, nnz values) — tagged ``encoding-type: csr_matrix`` (major =
+row) or ``csc_matrix`` (major = column) in the group's ``.zattrs`` (the
+public AnnData on-disk spec; the reference's flagship 1.3M-neuron matrix
+is ~93% zeros, so dense rows would be ~30× the bytes).
 
-- **write**: two passes, both O(nnz) shuffle and O(partitions) driver
-  state — (1) per-row counts → exclusive prefix offsets via the
-  range-partitioned prefix-sum pattern (``api.AnnFrame.reindex``'s
-  shape: per-partition totals to the driver, never O(rows) driver
-  state), giving every entry its global FLAT position; (2) entries
-  keyed by ``flat div chunk`` go through the shared
-  ``chunkgrid.write_chunk_grid``, which writes one ``indices`` + one
-  ``data`` chunk object per grid cell.  ``indptr`` is the same
-  prefix-sum vector written through the same chunk writer; each
-  array's ``.zarray`` is written after its chunk job.
-- **read**: ``indptr`` rebuilds per-row extents with a self-join on
-  ``i+1`` (equi-join, no global window), ``sequence``+``explode``
-  enumerates each row's flat positions, and two flat-keyed equi-joins
-  recover (row, col, value) — every step shuffle-bounded by nnz.
+- **write** (CSR; CSC is the CSR writer on the transposed stream): one
+  aggregate grouped by row block ``row_id div entries_per_chunk`` is
+  collected — each block's entry count and row/col bounds, so the
+  out-of-shape guard, ``nnz`` and every block's offset come from
+  O(n_rows / entries_per_chunk) driver state.  One ``groupBy(block) ⟶
+  applyInPandas`` pass then sorts each block's entries by (row, col),
+  places them at ``offset + rank``, writes the block's ``indptr`` chunk
+  (the row block and the ``indptr`` chunk are the same rows) and feeds
+  the placed entries to ``chunkgrid.write_chunk_grid``, which writes the
+  ``indices`` and ``data`` chunks.  A row block with no entries still
+  gets its ``indptr`` chunk: every block carries one marker row.  Each
+  array's ``.zarray`` goes out after the chunk job.
+- **read**: the group is a ``tenx.ZarrCscStore``, so both layouts decode
+  in ``tenx.ingest_csc``: ``indptr`` on the driver, nnz-balanced slices
+  of a whole number of chunks, one ``mapInPandas`` decoding each slice's
+  overlapping ``indices``/``data`` chunks.
 
 Scale note: chunk sizes are in ENTRIES, so object count scales with nnz
 (bytes ≈ 12·nnz compressed), not n_rows×n_cols — the whole point of the
@@ -37,19 +38,16 @@ import os
 import shutil
 
 import numpy as np
+import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..registry import query
 from .chunkgrid import Member, write_chunk_grid
-from .zarrv2 import (
-    _DEFAULT_COMPRESSOR,
-    _v2_meta,
-    _v2_put,
-    read_zarr_vector,
-)
+from .tenx import ZarrCscStore, ingest_csc
+from .zarrv2 import _DEFAULT_COMPRESSOR, _v2_meta, _v2_put
 
 #: entries per chunk object for the three CSR arrays — sized so one
 #: compressed object is a few hundred KB at float64, the object-store
@@ -57,52 +55,6 @@ from .zarrv2 import (
 CSR_ENTRIES_PER_CHUNK = 4096
 
 _CSR_ATTRS = {"encoding-type": "csr_matrix", "encoding-version": "0.1.0"}
-
-
-def _exclusive_prefix_sums(vals: DataFrame, n_part: int) -> DataFrame:
-    """(i, c) → (i, off) where off = Σ c(j) for j < i — the
-    range-partitioned prefix-sum: partition-local running sums plus
-    O(partitions) exclusive partition offsets collected to the driver
-    (never O(rows) driver state; the ``reindex`` pattern)."""
-    spark = vals.sparkSession
-    ids = (
-        vals.repartitionByRange(n_part, "i")
-        .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    totals = {
-        int(r["pid"]): int(r["s"])
-        for r in ids.groupBy("pid").agg(F.sum("c").alias("s")).collect()
-    }
-    offs, acc = [], 0
-    for p in range(max(totals, default=-1) + 1):
-        offs.append(acc)
-        acc += totals.get(p, 0)
-    offs_df = spark.createDataFrame([(offs,)], "offs array<bigint>")
-    w = W.partitionBy("pid").orderBy("i").rowsBetween(W.unboundedPreceding, 0)
-    return ids.crossJoin(F.broadcast(offs_df)).select(
-        "i",
-        (
-            F.element_at("offs", F.col("pid") + 1) + F.sum("c").over(w) - F.col("c")
-        ).alias("off"),
-    )
-
-
-def _write_chunked_vectors(
-    entries: DataFrame,
-    specs: list[tuple[str, str, str]],
-    n: int,
-    chunk: int,
-    compressor: dict | None,
-) -> int:
-    """Write one or more 1-D arrays in ONE ``write_chunk_grid`` pass:
-    ``entries`` carries (idx, <col per spec>); each spec is (src_col,
-    array_path, dtype in {'<i8','<f8'}); each ``.zarray`` is written
-    after the chunk job."""
-    members = [Member(apath, src, np.dtype(dt)) for src, apath, dt in specs]
-    return write_chunk_grid(
-        entries, "idx", n, chunk, members, _v2_put(compressor), _v2_meta(compressor)
-    )
 
 
 def write_zarr_csr(
@@ -123,65 +75,69 @@ def write_zarr_csr(
     spark = coo.sparkSession
     shutil.rmtree(group_path, ignore_errors=True)
     os.makedirs(group_path, exist_ok=True)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    epc = entries_per_chunk
+    n_blocks = -(-(n_rows + 1) // epc)  # indptr chunks = row blocks
 
-    guard = coo.agg(
-        F.count(F.lit(1)).alias("nnz"),
+    entries = coo.select(
+        F.expr(f"row_id div {epc}").alias("b"), F.col("row_id").cast("bigint").alias("row_id"),
+        F.col("col").cast("bigint").alias("col"), F.col("v").cast("double").alias("v"),
+    )
+    blocks = entries.groupBy("b").agg(
+        F.count(F.lit(1)).alias("n"),
         F.min("row_id").alias("rmin"),
         F.max("row_id").alias("rmax"),
         F.min("col").alias("cmin"),
         F.max("col").alias("cmax"),
-    ).collect()[0]
-    nnz = int(guard["nnz"])
-    if nnz and not (
-        0 <= int(guard["rmin"])
-        and int(guard["rmax"]) < n_rows
-        and 0 <= int(guard["cmin"])
-        and int(guard["cmax"]) < n_cols
-    ):
-        raise ValueError(
-            f"csr write: entries outside shape [{n_rows}, {n_cols}]:"
-            f" rows [{guard['rmin']}, {guard['rmax']}],"
-            f" cols [{guard['cmin']}, {guard['cmax']}]"
+    ).collect()
+    nnz = sum(int(r["n"]) for r in blocks)
+    if blocks:
+        rmin, rmax = min(r["rmin"] for r in blocks), max(r["rmax"] for r in blocks)
+        cmin, cmax = min(r["cmin"] for r in blocks), max(r["cmax"] for r in blocks)
+        if not (0 <= rmin and rmax < n_rows and 0 <= cmin and cmax < n_cols):
+            raise ValueError(
+                f"csr write: entries outside shape [{n_rows}, {n_cols}]:"
+                f" rows [{rmin}, {rmax}], cols [{cmin}, {cmax}]"
+            )
+    counts = np.zeros(n_blocks, dtype=np.int64)
+    for r in blocks:
+        counts[int(r["b"])] = int(r["n"])
+    offs = np.cumsum(counts) - counts
+
+    put, meta = _v2_put(compressor), _v2_meta(compressor)
+    indptr = Member(os.path.join(group_path, "indptr"), "p", np.dtype("<i8"))
+    os.makedirs(indptr.path, exist_ok=True)
+
+    def _place(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
+        # row block b: its indptr chunk, and its entries at offs[b] + rank
+        # by (row, col); the marker row (row_id -1) only makes b present
+        b = int(key[0])
+        pdf = pdf[pdf["row_id"] >= 0].sort_values(["row_id", "col"], kind="stable")
+        rows, off = pdf["row_id"].to_numpy(np.int64), int(offs[b])
+        valid = min(epc, n_rows + 1 - b * epc)
+        ptr = np.zeros(epc, dtype=np.int64)
+        ptr[:valid] = off + np.searchsorted(rows, b * epc + np.arange(valid))
+        put(indptr.path, (b,), ptr, valid)
+        return pd.DataFrame(
+            {
+                "idx": off + np.arange(len(rows), dtype=np.int64),
+                "ic": pdf["col"].to_numpy(np.int64),
+                "dv": pdf["v"].to_numpy(np.float64),
+            }
         )
 
-    # indptr = exclusive prefix sums of per-row counts over the FULL row
-    # spine (all-zero rows contribute 0), with the closing total at i=n.
-    counts = coo.groupBy(F.col("row_id").alias("i")).agg(
-        F.count(F.lit(1)).alias("c")
+    markers = spark.range(n_blocks).select(
+        F.col("id").alias("b"), F.lit(-1).cast("bigint").alias("row_id"),
+        F.lit(-1).cast("bigint").alias("col"), F.lit(0.0).alias("v"),
     )
-    spine = (
-        spark.range(n_rows + 1)
-        .select(F.col("id").alias("i"))
-        .join(counts, "i", "left")
-        .select("i", F.coalesce("c", F.lit(0)).alias("c"))
+    placed = entries.unionByName(markers).groupBy("b").applyInPandas(
+        _place, schema="idx long, ic long, dv double"
     )
-    indptr = _exclusive_prefix_sums(spine, n_part).localCheckpoint(eager=True)
-
-    _write_chunked_vectors(
-        indptr.select(F.col("i").alias("idx"), F.col("off").alias("p")),
-        [("p", os.path.join(group_path, "indptr"), "<i8")],
-        n_rows + 1,
-        entries_per_chunk,
-        compressor,
-    )
-
-    # every entry's flat position = its row's offset + rank-within-row
-    rk = F.row_number().over(W.partitionBy("row_id").orderBy("col")) - 1
-    flat = (
-        coo.join(indptr.select(F.col("i").alias("row_id"), "off"), "row_id")
-        .select((F.col("off") + rk).alias("idx"), "col", "v")
-    )
-    n_chunks = _write_chunked_vectors(
-        flat.select("idx", F.col("col").alias("ic"), F.col("v").alias("dv")),
-        [
-            ("ic", os.path.join(group_path, "indices"), "<i8"),
-            ("dv", os.path.join(group_path, "data"), "<f8"),
-        ],
-        max(nnz, 1),
-        entries_per_chunk,
-        compressor,
-    )
+    members = [
+        Member(os.path.join(group_path, "indices"), "ic", np.dtype("<i8")),
+        Member(os.path.join(group_path, "data"), "dv", np.dtype("<f8")),
+    ]
+    n_chunks = write_chunk_grid(placed, "idx", max(nnz, 1), epc, members, put, meta)
+    meta(indptr, [n_rows + 1], [epc])
     with open(os.path.join(group_path, ".zgroup"), "w") as f:
         json.dump({"zarr_format": 2}, f)
     with open(os.path.join(group_path, ".zattrs"), "w") as f:
@@ -189,54 +145,29 @@ def write_zarr_csr(
     return {"shape": [n_rows, n_cols], "nnz": nnz, "n_chunks": int(n_chunks)}
 
 
-def _read_compressed_axis(
-    spark: SparkSession, group_path: str, n_major: int
-) -> DataFrame:
-    """Decode an indptr/indices/data triple to ``(major, minor, v)`` —
-    the shared extent-join kernel under both compressed layouts (CSR:
-    major=row; CSC: major=col).  Every step is shuffle-bounded by nnz:
-    the indptr self-join on ``i+1`` is an equi-join (no global window),
-    ``sequence``+``explode`` enumerates each extent's flat positions, and
-    two flat-keyed equi-joins recover the entries."""
-    ptr = read_zarr_vector(spark, os.path.join(group_path, "indptr"))
-    starts = ptr.where(F.col("row") < n_major).select(
-        F.col("row").alias("major"), F.col("value").alias("lo")
-    )
-    ends = ptr.where(F.col("row") > 0).select(
-        (F.col("row") - 1).alias("major"), F.col("value").alias("hi")
-    )
-    extents = starts.join(ends, "major").where(F.col("hi") > F.col("lo"))
-    flats = extents.select(
-        "major",
-        F.explode(F.sequence("lo", F.col("hi") - 1)).alias("idx"),
-    )
-    idxs = read_zarr_vector(spark, os.path.join(group_path, "indices")).select(
-        F.col("row").alias("idx"), F.col("value").alias("minor")
-    )
-    data = read_zarr_vector(spark, os.path.join(group_path, "data")).select(
-        F.col("row").alias("idx"), F.col("value").alias("v")
-    )
-    return flats.join(idxs, "idx").join(data, "idx").select("major", "minor", "v")
-
-
-def _validated_attrs(group_path: str, want: str) -> dict:
+def _check_encoding(group_path: str, want: str) -> None:
     with open(os.path.join(group_path, ".zattrs")) as f:
-        attrs = json.load(f)
-    if attrs.get("encoding-type") != want:
-        raise ValueError(
-            f"not a {want} group: {group_path} (encoding-type ="
-            f" {attrs.get('encoding-type')!r})"
-        )
-    return attrs
+        got = json.load(f).get("encoding-type")
+    if got != want:
+        raise ValueError(f"not a {want} group: {group_path} (encoding-type = {got!r})")
+
+
+def _read_compressed(spark: SparkSession, group_path: str) -> DataFrame:
+    """``ingest_csc`` over a Zarr group: ``(row=minor, col=major, value)``,
+    one slice per core, each a whole number of ``data`` chunks."""
+    store = ZarrCscStore(group_path)
+    n, c = int(store.meta["data"]["shape"][0]), int(store.meta["data"]["chunks"][0])
+    cores = spark.sparkContext.defaultParallelism
+    return ingest_csc(spark, store, c * max(1, -(-n // (c * cores))))
 
 
 def read_zarr_csr(spark: SparkSession, group_path: str) -> DataFrame:
     """Read an AnnData CSR group back to COO ``(row_id, col, v)`` —
     zeros stay implicit.  Validates the ``csr_matrix`` encoding tag
     (a dense array or CSC group must not decode as CSR silently)."""
-    attrs = _validated_attrs(group_path, "csr_matrix")
-    return _read_compressed_axis(spark, group_path, int(attrs["shape"][0])).select(
-        F.col("major").alias("row_id"), F.col("minor").alias("col"), "v"
+    _check_encoding(group_path, "csr_matrix")
+    return _read_compressed(spark, group_path).select(
+        F.col("col").alias("row_id"), F.col("row").alias("col"), F.col("value").alias("v")
     )
 
 
@@ -244,9 +175,9 @@ def read_zarr_csc(spark: SparkSession, group_path: str) -> DataFrame:
     """Read an AnnData CSC group back to COO ``(row_id, col, v)`` — the
     column-compressed twin (10x HDF5 matrices ship CSC, so a no-transpose
     migration wants this layout on the Zarr side too)."""
-    attrs = _validated_attrs(group_path, "csc_matrix")
-    return _read_compressed_axis(spark, group_path, int(attrs["shape"][1])).select(
-        F.col("minor").alias("row_id"), F.col("major").alias("col"), "v"
+    _check_encoding(group_path, "csc_matrix")
+    return _read_compressed(spark, group_path).select(
+        F.col("row").alias("row_id"), "col", F.col("value").alias("v")
     )
 
 
@@ -261,7 +192,7 @@ def write_zarr_csc(
     """Write COO ``(row_id, col, v)`` in the AnnData ``csc_matrix`` group
     encoding: ``indptr`` spans COLUMNS, ``indices`` holds row ids, entries
     order by (col, row).  Implemented as the CSR writer on the transposed
-    entry stream (identical distributed prefix-sum machinery), then the
+    entry stream (column blocks placed from driver-known offsets), then the
     attrs re-tagged with the csc encoding and the UNtransposed shape —
     byte-level the members are exactly what the spec says a CSC group
     holds."""
@@ -309,9 +240,10 @@ def zarr_sparse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AnnData sparse CSR encoding end to end (r14 verdict #2): sparsify
     the embeddings matrix (keep entries > 0.25 — rows losing every entry
     exercise the all-zero-row indptr path), write the
-    ``indptr``/``indices``/``data`` group with distributed prefix-sum
-    flat placement, read it back through the extent-join decoder, and
-    hash the recovered COO against the oracle's direct sparsification.
+    ``indptr``/``indices``/``data`` group (entries placed per row block
+    from driver-known block offsets), read it back through the 10x slice
+    decoder (``tenx.ingest_csc`` over the Zarr group), and hash the
+    recovered COO against the oracle's direct sparsification.
     float64 ``data`` round-trips the values exactly (rounded to 6 only
     for the oracle's formatting, like every zarr roundtrip); bytes scale
     with nnz, not n×d — the measured ratio is a SCALE.md row."""
@@ -366,8 +298,8 @@ def zarr_csc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     embeddings matrix on the NEGATIVE tail (entries < -0.25 — disjoint
     from the CSR query's slice, so the two roundtrips cannot mask each
     other), write the column-majored ``indptr``/``indices``/``data``
-    group via the shared prefix-sum writer on the transposed stream,
-    read it back through the extent-join decoder (major=col), and hash
+    group via the CSR writer on the transposed stream, read it back
+    through the 10x slice decoder (major=col, no transpose), and hash
     the recovered COO against the oracle's direct sparsification.  The
     on-disk members are byte-level what the AnnData spec says a
     ``csc_matrix`` group holds; bytes scale with nnz either way."""

@@ -17,18 +17,24 @@ Spark-first ingestion shape — the distributed work is format-agnostic:
 3. a slice-spec DataFrame is repartitioned one-slice-per-task and
    ``mapInPandas`` opens the store executor-side, reading exactly the
    ``data``/``indices`` byte range its slice owns (HDF5 hyperslab /
-   npz array slice) and emitting COO rows as Arrow batches.
+   npz array slice / overlapping Zarr chunks) and emitting COO rows as
+   Arrow batches.
 
-No driver materialization of matrix data at any scale.  The HDF5
-container access itself is isolated behind ``CscStore``: ``H5CscStore``
-uses ``h5py`` when installed and otherwise the pure-Python ``minih5``
-reader (public-spec subset covering real CellRanger files — contiguous
-or chunked+deflate+shuffle datasets), so the real-container branch runs
-even in this bare environment.  The npz-backed store (same CSC triplet,
-numpy's public container) additionally exercises the distributed path —
-the registered ``tenx_csc_ingest`` roundtrip runs it against a
-deterministic CSC fixture derived from the embeddings parquet and is
-hash-checked by the plain relational oracle.
+No driver materialization of matrix data at any scale.  The container
+access itself is isolated behind ``CscStore``, with three backends:
+
+- ``H5CscStore`` uses ``h5py`` when installed and otherwise the
+  pure-Python ``minih5`` reader (public-spec subset covering real
+  CellRanger files — contiguous or chunked+deflate+shuffle datasets), so
+  the real-container branch runs even in this bare environment;
+- ``NpzCscStore`` (same CSC triplet, numpy's public container)
+  exercises the distributed path — the registered ``tenx_csc_ingest``
+  roundtrip runs it against a deterministic CSC fixture derived from the
+  embeddings parquet, hash-checked by the plain relational oracle;
+- ``ZarrCscStore`` is an AnnData ``csr_matrix``/``csc_matrix`` Zarr v2
+  group, decoding only the ``indices``/``data`` chunks a slice overlaps.
+  ``sparse.read_zarr_csr``/``read_zarr_csc`` are this plan over it, so
+  the engine has one decoder of a compressed-axis triple.
 """
 
 from __future__ import annotations
@@ -46,6 +52,7 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType, StructField, Stru
 
 from ..catalog import load_table
 from ..registry import query
+from .zarrv2 import _read_chunk, read_zarray_meta
 
 
 def plan_csc_slices(indptr: np.ndarray, target_nnz: int) -> list[tuple[int, int]]:
@@ -170,6 +177,36 @@ class H5CscStore(CscStore):
                 f.read_slice(f"{self.GROUP}/indices", p0, p1).astype(np.int64),
                 f.read_slice(f"{self.GROUP}/data", p0, p1),
             )
+
+
+class ZarrCscStore(CscStore):
+    """An AnnData ``csc_matrix``/``csr_matrix`` Zarr v2 group: 1-D
+    ``indptr``/``indices``/``data`` arrays, ``indptr`` spanning the
+    compressed axis, which is this store's column axis (a CSR group reads
+    transposed).  ``read_cols`` decodes only the ``indices`` and ``data``
+    chunks overlapping its slice (``zarrv2._read_chunk``: an absent chunk
+    reads as ``fill_value``, a null fill raises)."""
+
+    def __init__(self, path: str):
+        self.path = path
+        self.meta = {
+            name: read_zarray_meta(os.path.join(path, name))
+            for name in ("indptr", "indices", "data")
+        }
+
+    def _range(self, name: str, p0: int, p1: int) -> np.ndarray:
+        meta = self.meta[name]
+        c = int(meta["chunks"][0])
+        k0, k1 = p0 // c, -(-p1 // c)
+        blocks = [_read_chunk(os.path.join(self.path, name), meta, (k,)) for k in range(k0, k1)]
+        empty = np.zeros(0, dtype=np.dtype(meta["dtype"]))
+        return np.concatenate([empty, *blocks])[p0 - k0 * c : p1 - k0 * c]
+
+    def indptr(self) -> np.ndarray:
+        return self._range("indptr", 0, int(self.meta["indptr"]["shape"][0])).astype(np.int64)
+
+    def read_cols(self, p0: int, p1: int) -> tuple[np.ndarray, np.ndarray]:
+        return self._range("indices", p0, p1).astype(np.int64), self._range("data", p0, p1)
 
 
 _COO_SCHEMA = StructType(
@@ -410,13 +447,14 @@ def tenx_to_zarr_sparse_migrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The flagship ETL in its SPARSE-preserving form (r14 verdict #2):
     10x CSC container → nnz-balanced slice decode (``ingest_csc``) →
     AnnData ``csr_matrix`` Zarr group (``sparse.write_zarr_csr`` — cell-
-    major row extents, zeros stay implicit) → extent-join read-back,
-    hash-checked against the nonzero oracle.  Unlike
-    ``tenx_to_zarr_migrate`` (the dense twin) nothing ever densifies:
-    at the reference's flagship shape (1.3M × 28k, ~93% zeros) the dense
-    route writes ~30× the bytes and the densify exchange carries n×d
-    fill values; here every stage — decode, prefix-sum placement, chunk
-    write, extent read — is O(nnz).  The pair of migrations gives a
+    major row extents, zeros stay implicit) → read-back through the same
+    slice decode over the Zarr group (``ZarrCscStore``), hash-checked
+    against the nonzero oracle.  Unlike ``tenx_to_zarr_migrate`` (the
+    dense twin) nothing ever densifies: at the reference's flagship shape
+    (1.3M × 28k, ~93% zeros) the dense route writes ~30× the bytes and
+    the densify exchange carries n×d fill values; here every stage —
+    decode, per-row-block placement, chunk write, slice read — is
+    O(nnz).  The pair of migrations gives a
     reference user both storage postures with the same verified values.
     """
     import tempfile

@@ -12,7 +12,7 @@ Zarr v3 layout (public spec, zarr-specs v3.0):
   ``chunk_key_encoding`` (``"default"``: keys ``c/0/1`` with a
   configurable ``/``/``.`` separator; ``"v2"``: dot-joined coords like
   v2), ``fill_value`` (JSON number or ``"NaN"``/``"Infinity"``/
-  ``"-Infinity"``), and a ``codecs`` CHAIN replacing v2's single
+  ``"-Infinity"``; ``null`` is not allowed and raises), and a ``codecs`` CHAIN replacing v2's single
   compressor + filters;
 - the codec chain is staged: array→array codecs (``transpose``), then
   exactly one array→bytes codec (``bytes``, carrying the endianness
@@ -199,6 +199,10 @@ def _validate_v3_array_meta(meta: dict, array_path: str) -> dict:
             f"zarr v3 chunk_key_encoding {keyenc.get('name')!r}"
         )
     fill = meta.get("fill_value", 0)
+    if fill is None:
+        raise ValueError(
+            f"zarr v3 array {array_path}: fill_value null is not allowed by the v3 spec"
+        )
     if isinstance(fill, str):
         if fill not in _FILL_STRINGS:
             raise NotImplementedError(f"zarr v3 fill_value {fill!r}")
@@ -357,8 +361,7 @@ def _decode_shard(blob: bytes, meta: dict) -> np.ndarray:
     offs = np.frombuffer(
         _decode_chain(idx_blob, sh["index_codecs"]), dtype="<u8"
     ).reshape(n, 2)
-    fill = meta["fill_value"]
-    block = np.full(meta["chunks"], fill if fill is not None else 0, dtype=dtype)
+    block = np.full(meta["chunks"], meta["fill_value"], dtype=dtype)
     for i in range(n):
         off, nb = int(offs[i, 0]), int(offs[i, 1])
         if off == _MISSING:

@@ -1074,15 +1074,30 @@ def test_dense_zarr_readers_ignore_files_outside_the_grid(spark, tmp_path, kind)
     assert got == want
 
 
-@pytest.mark.parametrize("kind", ["from_zarr", "v2", "v3", "v3_sharded", "pyds"])
+@pytest.mark.parametrize(
+    "kind", ["from_zarr", "v2", "v3", "v3_sharded", "v3_sharded_inner", "pyds"]
+)
 def test_from_zarr_reads_missing_chunk_as_fill_value(spark, tmp_path, kind):
     """Every dense Zarr reader: a chunk object absent from the store reads
     as the array's fill_value (zarr-python omits all-fill chunks) — the
     rows stay, filled; an array declaring fill_value null cannot be
-    filled and refuses."""
+    filled and refuses, also when only an inner chunk of a shard is
+    absent (``v3_sharded_inner``)."""
     import json
     import os
 
+    if kind == "v3_sharded_inner":
+        # rows 96..99 of the last 32-row shard: its second 16-row inner
+        # chunk lies past the array and is absent from the shard
+        x_dir = _grid_store(spark, str(tmp_path / kind), "v3_sharded")
+        doc = os.path.join(x_dir, "zarr.json")
+        with open(doc) as fh:
+            meta = json.load(fh)
+        with open(doc, "w") as fh:
+            json.dump({**meta, "fill_value": None}, fh)
+        with pytest.raises(ValueError, match="fill_value null"):
+            _grid_read(spark, x_dir, "v3_sharded").collect()
+        return
     if kind != "from_zarr":
         x_dir = _grid_store(spark, str(tmp_path / kind), kind)
         want = _slice_rows(_grid_read(spark, x_dir, kind))

@@ -17,13 +17,14 @@ import hashlib
 import json
 import os
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
 
 from single_cell_experiments_spark.api import AnnFrame
 from single_cell_experiments_spark.catalog import load_table
-from single_cell_experiments_spark.sources import sparse, zarrv2, zarrv3
+from single_cell_experiments_spark.sources import chunkgrid, sparse, zarrv2, zarrv3
 
 from tests.conftest import SF_DIR, count_jobs
 
@@ -216,9 +217,12 @@ _WRITERS = {
     "v2_append": lambda s, ids, p: zarrv2.append_zarr_rows(
         _rows(s, ids, lo=4).select("vec_id", "embedding"), p
     ),
-    "v2_sparse": lambda s, ids, p: sparse._write_chunked_vectors(
+    # the CSR writer's indices/data write: a 1-D v2 vector straight
+    # through the grid writer, with no bounds aggregate in front
+    "v2_sparse": lambda s, ids, p: chunkgrid.write_chunk_grid(
         _rows(s, ids).select(F.col("vec_id").alias("idx"), F.col("vec_id").alias("v")),
-        [("v", p, "<i8")], 4, 2, None,
+        "idx", 4, 2, [chunkgrid.Member(p, "v", np.dtype("<i8"))],
+        zarrv2._v2_put(None), zarrv2._v2_meta(None),
     ),
     "v3_group": lambda s, ids, p: zarrv3.write_zarr_v3_group(_rows(s, ids), p, rows_per_chunk=2),
     "v3_sharded": lambda s, ids, p: zarrv3.write_zarr_v3_group(
@@ -280,15 +284,21 @@ def test_positional_writers_reject_non_dense_ids(spark, tmp_path, writer, case):
 
 #: jobs each writer runs on the ``embeddings`` table in one job group, as
 #: measured (5 each): the bounds aggregate (dense-id guard and widths)
-#: plus the one chunk-grid job.  Job counts are deterministic, so a
-#: writer that grows a job fails here.
-WRITE_MAX_JOBS = {"v2_group": 5, "v3_sharded": 5}
+#: plus the one chunk-grid job.  The CSR writer of the entries > 0.25
+#: (6 measured) collects its per-row-block aggregate, then runs one
+#: placement pass into the chunk-grid job.  Job counts are
+#: deterministic, so a writer that grows a job fails here.
+WRITE_MAX_JOBS = {"v2_csr": 6, "v2_group": 5, "v3_sharded": 5}
 
 
 @pytest.mark.parametrize("writer", sorted(WRITE_MAX_JOBS))
 def test_writer_job_count_bound(spark, tmp_path, writer):
     e, path = load_table(spark, SF_DIR, "embeddings"), str(tmp_path / "s")
+    n, coo = e.count(), e.select(
+        F.col("vec_id").alias("row_id"), F.posexplode("embedding").alias("col", "v")
+    ).where(F.col("v") > 0.25)
     write = {
+        "v2_csr": lambda: sparse.write_zarr_csr(coo, path, n, 64),
         "v2_group": lambda: zarrv2.write_zarr_group(e, path),
         "v3_sharded": lambda: zarrv3.write_zarr_v3_group(e, path, shard_inner_rows=16),
     }[writer]

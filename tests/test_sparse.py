@@ -24,16 +24,24 @@ def _coo_df(spark, triplets):
 
 def test_csr_roundtrip_with_all_zero_rows(spark, tmp_path):
     """Rows 1 and 3 have no entries: indptr must still carry their (empty)
-    extents and the read side must not resurrect them."""
-    trips = [(0, 2, 1.5), (0, 0, -2.0), (2, 3, 0.25), (4, 1, 7.0), (4, 2, 8.0)]
-    store = str(tmp_path / "csr")
-    info = write_zarr_csr(_coo_df(spark, trips), store, n_rows=5, n_cols=4)
-    assert info["nnz"] == 5 and info["shape"] == [5, 4]
-    back = {
-        (int(r.row_id), int(r.col)): float(r.v)
-        for r in read_zarr_csr(spark, store).collect()
-    }
-    assert back == {(r, c): v for r, c, v in trips}
+    extents and the read side must not resurrect them.  The second input
+    (2 entries per chunk, 9 rows) leaves rows 2..5 and the last two rows
+    empty, so whole ``indptr`` chunks belong to rows without entries."""
+    cases = [
+        ([(0, 2, 1.5), (0, 0, -2.0), (2, 3, 0.25), (4, 1, 7.0), (4, 2, 8.0)], 5, 4096),
+        ([(0, 3, 1.5), (1, 0, -2.0), (1, 2, 0.5), (6, 1, 7.0), (6, 3, 8.0)], 9, 2),
+    ]
+    for k, (trips, n_rows, epc) in enumerate(cases):
+        store = str(tmp_path / f"csr{k}")
+        info = write_zarr_csr(
+            _coo_df(spark, trips), store, n_rows=n_rows, n_cols=4, entries_per_chunk=epc
+        )
+        assert info["nnz"] == 5 and info["shape"] == [n_rows, 4]
+        back = {
+            (int(r.row_id), int(r.col)): float(r.v)
+            for r in read_zarr_csr(spark, store).collect()
+        }
+        assert back == {(r, c): v for r, c, v in trips}
 
 
 def test_csr_on_disk_layout_is_the_anndata_spec(spark, tmp_path):
@@ -210,3 +218,25 @@ def test_csc_reader_refuses_csr_group(spark, tmp_path):
     write_zarr_csr(_coo_df(spark, [(0, 1, 3.0)]), store, n_rows=2, n_cols=2)
     with pytest.raises(ValueError, match="not a csc_matrix"):
         read_zarr_csc(spark, store)
+
+
+def test_csr_read_is_one_slice_pass(spark, tmp_path):
+    """The CSR read is the 10x slice decoder over the Zarr group: the
+    driver decodes ``indptr``, then one ``mapInPandas`` with no join, in
+    at most 2 Spark jobs (the slice-spec exchange and the decode), as
+    measured on the embeddings at entries > 0.25."""
+    from single_cell_experiments_spark.catalog import load_table
+    from single_cell_experiments_spark.plans import inspect
+    from tests.conftest import SF_DIR, count_jobs
+
+    e = load_table(spark, SF_DIR, "embeddings")
+    coo = e.select(
+        F.col("vec_id").alias("row_id"), F.posexplode("embedding").alias("col", "v")
+    ).where(F.col("v") > 0.25)
+    store = str(tmp_path / "csr")
+    info = write_zarr_csr(coo, store, e.count(), 64)
+    back = read_zarr_csr(spark, store)
+    assert count_jobs(spark, back.collect) <= 2
+    plan = inspect.executed_plan(back)
+    assert "Join" not in plan and plan.count("MapInPandas") == 1
+    assert back.count() == info["nnz"] > 0
